@@ -29,14 +29,35 @@ object Recommender {
 
   val NumItems = 100
   val Rank = 8
-  // the fixture-scale ALS hyperparameters — referenced by BOTH the
-  // production fit below and RecommenderPipeline.trainingCurve's
-  // defaults, so the "telemetry endpoint == q36 trajectory" claim can't
-  // silently drift when one side is tuned
+  // the ALS hyperparameters shared by every fit (q36/q38, the drop-in
+  // pipeline, the training curve, the specs) through [[als]], so the
+  // "telemetry endpoint == q36 trajectory" claim can't silently drift
+  // when one side is tuned
   val RegParam = 0.015
   val MaxIter = 10
   val Seed = 42L
-  val NumBlocks = 8
+  // Fixed, not derived from parallelism: factor init is seeded per
+  // block, so a fixed count keeps every fit identical at any core count.
+  // MLlib's default is 10 blocks per side. For a 100K-rating, rank-64
+  // fit on 4 task slots (4-vCPU Xeon VM) that meant 3 task waves per
+  // stage: 288 tasks and 65.8 MB of shuffle per pipeline run, with
+  // 3.3-4.1 s in the ALS iteration job. 4 blocks run each stage in one
+  // wave: 114 tasks, 28.4 MB and 2.7 s. At cluster scale this would be
+  // sized to executor slots.
+  val NumBlocks = 4
+
+  /** The one ALS estimator every fit uses: rating columns
+    * user/item/rating, [[RegParam]] (the reference's K), [[Seed]] and
+    * [[NumBlocks]] per side. Cold-start rows are dropped from
+    * `transform`; scoring paths that must keep them join the factor
+    * tables themselves (RecommenderPipeline.run).
+    */
+  def als(rank: Int = Rank, maxIter: Int = MaxIter): org.apache.spark.ml.recommendation.ALS =
+    new org.apache.spark.ml.recommendation.ALS()
+      .setUserCol("user").setItemCol("item").setRatingCol("rating")
+      .setRank(rank).setRegParam(RegParam).setMaxIter(maxIter).setSeed(Seed)
+      .setNumUserBlocks(NumBlocks).setNumItemBlocks(NumBlocks)
+      .setColdStartStrategy("drop")
 
   /** One ALS fit per (sfDir) — q36 (train+evaluate) and q38 (serve) share
     * the trained model instead of re-fitting, the same way a production
@@ -50,19 +71,8 @@ object Recommender {
 
   private[graft] def alsModel(s: SparkSession, dir: String): org.apache.spark.ml.recommendation.ALSModel =
     graft.Memo.sync(modelCache, graft.Memo.key(s, dir))( {
-      import org.apache.spark.ml.recommendation.ALS
       val r = trainInput(s, dir).cache()
-      try
-        new ALS()
-          .setUserCol("user").setItemCol("item").setRatingCol("rating")
-          .setRank(Rank).setRegParam(RegParam).setMaxIter(MaxIter).setSeed(Seed)
-          // bounded block count: on 60K-row fixtures the default
-          // (defaultParallelism = 32) spends more time scheduling 32-block
-          // shuffles per iteration than computing; at cluster scale this
-          // would be sized to executors, not hard-coded
-          .setNumUserBlocks(NumBlocks).setNumItemBlocks(NumBlocks)
-          .setColdStartStrategy("drop")
-          .fit(r)
+      try als().fit(r)
       finally r.unpersist()
     })
 
@@ -271,9 +281,10 @@ object Recommender {
   /** q36 — ALS train + score (O2/O3 replaced by
     * org.apache.spark.ml.recommendation.ALS): rank 8, regParam 0.015
     * (the reference's K, SVDMovieLensSparkJava.java:43), fixed seed.
-    * Factor init depends on block partitioning, so results are seed-
-    * stable only for a fixed parallelism — rows-only for the driver;
-    * the ScalaTest spec asserts holdout MAE beats the q32 baseline.
+    * Factor init is seeded per block and the block count is fixed
+    * ([[NumBlocks]]), so rows repeat at any core count; learned factors
+    * have no DuckDB twin, so it is rows-only for the driver and the
+    * ScalaTest spec asserts holdout MAE beats the q32 baseline.
     */
   val q36 = rowsOnly(
     "q36_als_recommender",

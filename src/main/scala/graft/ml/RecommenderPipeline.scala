@@ -1,8 +1,9 @@
 package graft.ml
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions.clamp
+import graft.functions.VecOps
 import graft.sources.Tables
 
 /** Drop-in replacement for the reference's `main()` flow
@@ -13,9 +14,14 @@ import graft.sources.Tables
   * A reference user switches by calling
   * `RecommenderPipeline.run(spark, "u.data", "u1.test", outDir)` — same
   * three inputs, same outputs, same metric — with training now MLlib ALS
-  * (64 features, the reference's regularization K=0.015, fixed seed)
-  * instead of 768M serial driver-side SGD updates, and scoring a
-  * broadcast join instead of a hand-rolled closure lookup.
+  * ([[Recommender.als]]: 64 features, the reference's regularization
+  * K=0.015, fixed seed, a fixed [[Recommender.NumBlocks]] per side)
+  * instead of 768M serial driver-side SGD updates. Scoring is two
+  * broadcast left joins of the user and item factor tables onto the test
+  * split with a codegen'd dot product, instead of a hand-rolled closure
+  * lookup. Count and MAE are observed on the TSV write itself
+  * (`Dataset.observe`), so the scored rows are computed once and never
+  * cached or re-read.
   */
 object RecommenderPipeline {
 
@@ -39,28 +45,21 @@ object RecommenderPipeline {
     * 100 TB pipeline would checkpoint factor matrices per iteration and
     * evaluate those instead (same observable, amortized cost).
     *
-    * Returns the metric sequence and the final-iteration model (so the
-    * caller can verify the curve's endpoint matches a production fit
-    * with the same hyperparameters — RecommenderSpec ties it to q36).
+    * Every fit is [[Recommender.als]] at rank [[Recommender.Rank]], and
+    * it returns the final-iteration model, so the caller can verify the
+    * curve's endpoint matches q36's production fit (RecommenderSpec).
     */
   def trainingCurve(spark: SparkSession, train: DataFrame,
-      rank: Int = Recommender.Rank, regParam: Double = Recommender.RegParam,
-      maxIter: Int = Recommender.MaxIter, seed: Long = Recommender.Seed,
-      numBlocks: Int = Recommender.NumBlocks)
+      maxIter: Int = Recommender.MaxIter)
       : (Seq[IterationMetric], org.apache.spark.ml.recommendation.ALSModel) = {
-    import org.apache.spark.ml.recommendation.{ALS, ALSModel}
+    import org.apache.spark.ml.recommendation.ALSModel
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
     val t = train.cache()
     try {
       var prev = Double.NaN
       var lastModel: ALSModel = null
       val metrics = (1 to maxIter).map { i =>
-        val m = new ALS()
-          .setUserCol("user").setItemCol("item").setRatingCol("rating")
-          .setRank(rank).setRegParam(regParam).setMaxIter(i).setSeed(seed)
-          .setNumUserBlocks(numBlocks).setNumItemBlocks(numBlocks)
-          .setColdStartStrategy("drop")
-          .fit(t)
+        val m = Recommender.als(maxIter = i).fit(t)
         val rmse = m.transform(t)
           .agg(sqrt(avg(pow(col("rating") - col("prediction"), 2)))).head().getDouble(0)
         val d = prev - rmse
@@ -75,60 +74,62 @@ object RecommenderPipeline {
 
   def run(spark: SparkSession, trainPath: String, testPath: String,
       outPath: String, rank: Int = 64, maxIter: Int = 10): Result = {
-    import org.apache.spark.ml.recommendation.ALS
-
     // Entry point 1 — LoadHistory (:185-223): parallel TSV ingest. The
     // per-entity stats the reference collected to driver arrays stay
     // relational (q30/q31 shapes) and are not needed for ALS itself.
-    val train = Tables.ratingsTsv(spark, trainPath)
-      .select(col("user_id").as("user"), col("item_id").as("item"),
-        col("rating").cast("float").as("rating"))
-      .cache()
+    // Cached for the fit's passes and the global mean, released below.
+    val train = ratingsTsv(spark, trainPath).cache()
+    try {
+      // Entry point 2 — CalcFeatures (:409-449) replaced by ALS.fit:
+      // the blocked alternating-least-squares epoch protocol is what the
+      // dead spark_CalcFeatures path (:366-406) was reaching for.
+      val model = Recommender.als(rank, maxIter).fit(train)
+      val globalMean = train.agg(avg(col("rating"))).head().getDouble(0)
 
-    // Entry point 2 — CalcFeatures (:409-449) replaced by ALS.fit:
-    // the blocked alternating-least-squares epoch protocol is what the
-    // dead spark_CalcFeatures path (:366-406) was reaching for.
-    val model = new ALS()
-      .setUserCol("user").setItemCol("item").setRatingCol("rating")
-      .setRank(rank).setRegParam(0.015).setMaxIter(maxIter).setSeed(42L)
-      .setColdStartStrategy("nan")
-      .fit(train)
+      // Entry point 3 — ProcessTest (:452-471): score the holdout, clamp
+      // into [1,5] (F2), fall back to the global mean for cold-start pairs
+      // (the reference would produce INIT-dot garbage there; a missing
+      // factor row gives a null dot -> prior is strictly saner). Both
+      // factor tables are bounded by the entity counts, so they ride as
+      // broadcasts and the test split streams through without a shuffle.
+      val users = model.userFactors.select(col("id").as("user"), col("features").as("uf"))
+      val items = model.itemFactors.select(col("id").as("item"), col("features").as("if"))
+      val scored = ratingsTsv(spark, testPath)
+        .join(broadcast(users), Seq("user"), "left")
+        .join(broadcast(items), Seq("item"), "left")
+        .select(col("user").as("user_id"), col("item").as("item_id"), col("rating"),
+          clamp(coalesce(VecOps.dotF(col("uf"), col("if")), lit(globalMean)), 1.0, 5.0)
+            .as("pred"))
 
-    // Entry point 3 — ProcessTest (:452-471): score the holdout, clamp
-    // into [1,5] (F2), fall back to the global mean for cold-start pairs
-    // (the reference would produce INIT-dot garbage there; NaN -> prior
-    // is strictly saner), write TSV, report MAE.
-    val globalMean = train.agg(avg(col("rating"))).head().getDouble(0)
-    val test = Tables.ratingsTsv(spark, testPath)
-      .select(col("user_id").as("user"), col("item_id").as("item"),
-        col("rating").cast("float").as("rating"))
-    val scored = model.transform(test)
-      .withColumn("pred",
-        clamp(coalesce(
-          when(isnan(col("prediction")), lit(null)).otherwise(col("prediction")),
-          lit(globalMean)), 1.0, 5.0))
-      .select(col("user").as("user_id"), col("item").as("item_id"),
-        col("rating"), col("pred"))
-      .cache()
-
-    Recommender.writePredictionsTsv(scored, outPath)
-
-    val row = scored.agg(
-      count(lit(1)).as("n"),
-      avg(abs(col("rating") - col("pred"))).as("mae")).head()
-    val result = Result(row.getLong(0), row.getDouble(1))
-    log.info(s"Number of predictions: ${result.nPredictions}") // reference :470's printout shape
-    log.info(f"Avg Abs(diff): ${result.mae}%.4f")
-    result
+      // write TSV and report count + MAE from the same pass
+      val metrics = Observation("pipeline")
+      Recommender.writePredictionsTsv(
+        scored.observe(metrics,
+          count(lit(1)).as("n"), avg(abs(col("rating") - col("pred"))).as("mae")),
+        outPath)
+      val m = metrics.get
+      val result = Result(m("n").asInstanceOf[Long],
+        Option(m("mae")).fold(Double.NaN)(_.asInstanceOf[Double]))
+      log.info(s"Number of predictions: ${result.nPredictions}") // reference :470's printout shape
+      log.info(f"Avg Abs(diff): ${result.mae}%.4f")
+      result
+    } finally train.unpersist()
   }
+
+  private def ratingsTsv(spark: SparkSession, path: String): DataFrame =
+    Tables.ratingsTsv(spark, path)
+      .select(col("user_id").as("user"), col("item_id").as("item"),
+        col("rating").cast("float").as("rating"))
 
   /** CLI: runMain graft.ml.RecommenderPipeline <train.tsv> <test.tsv> <outDir> */
   def main(args: Array[String]): Unit = {
     val Array(trainPath, testPath, outPath) = args.take(3)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      .master(s"local[$cpus]")
       .appName("graft-recommender")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true") // no-op for the µs fixture; keeps a ns-encoded events file readable

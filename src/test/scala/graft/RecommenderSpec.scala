@@ -45,7 +45,6 @@ class RecommenderSpec extends AnyFunSuite {
     // test plants a deterministic rank-4 user×item interaction — item
     // MAIN effects cancel, leaving exactly the signal a baseline
     // predictor cannot express and a factor model must recover.
-    import org.apache.spark.ml.recommendation.ALS
     import graft.functions.GraftFunctions.{clamp => clampF, pseudoAvg}
     import spark.implicits._
     val rows = for { u <- 0 until 150; i <- 0 until 80 } yield {
@@ -58,15 +57,8 @@ class RecommenderSpec extends AnyFunSuite {
     val r = rows.toDF("user", "item", "rating", "fold")
     val train = r.filter(col("fold") =!= 0).cache()
     val test = r.filter(col("fold") === 0).cache()
-    val model = new ALS()
-      .setUserCol("user").setItemCol("item").setRatingCol("rating")
-      .setRank(64).setRegParam(0.015)
-      .setMaxIter(Recommender.MaxIter).setSeed(Recommender.Seed)
-      .setNumUserBlocks(Recommender.NumBlocks).setNumItemBlocks(Recommender.NumBlocks)
-      .setColdStartStrategy("drop")
-      .fit(train)
-    val alsMae = model.transform(test)
-      .filter(!isnan(col("prediction")))
+    val model = Recommender.als(rank = 64).fit(train)
+    val alsMae = model.transform(test) // cold-start rows dropped
       .agg(avg(abs(col("rating") - clampF(col("prediction"), 1.0, 5.0))))
       .head().getDouble(0)
     val trainStats = train.groupBy(col("item"))
@@ -114,18 +106,40 @@ class RecommenderSpec extends AnyFunSuite {
       if (n % 6 == 0) teW.write(line) else trW.write(line)
       n += 1
     }
+    // the ratings above average exactly 3.0; these move the training
+    // mean off that round number, so the cold-start check below can tell
+    // the mean from a constant
+    for (i <- 1 to 25) trW.write(s"61\t$i\t5\t${880000000 + n + i}\n")
+    // a cold-start pair: user 999 and item 999 never appear in training
+    teW.write("999\t999\t5\t880999999\n")
     trW.close(); teW.close()
     val out = dir.resolve("preds").toString
+    spark.catalog.clearCache() // safe between runs, as Verify and Bench do
     val res = RecommenderPipeline.run(spark, tr.toString, te.toString, out,
       rank = 8, maxIter = 5)
-    assert(res.nPredictions === 200)
+    assert(spark.sharedState.cacheManager.isEmpty, "the pipeline run left a Dataset cached")
+    assert(res.nPredictions === 201)
     assert(res.mae > 0.0 && res.mae < 1.2,
       s"pipeline MAE ${res.mae} should beat a random predictor")
     val lines = spark.read.text(out).collect().map(_.getString(0))
-    assert(lines.length === 200)
-    assert(lines.forall(_.split("\t", -1).length == 5))
+    assert(lines.length === 201)
+    val fields = lines.map(_.split("\t", -1))
+    assert(fields.forall(_.length == 5))
     // rating field is the integer form, as the reference prints it
-    assert(lines.forall(l => !l.split("\t")(2).contains(".")))
+    assert(fields.forall(f => !f(2).contains(".")))
+    // the cold-start row is scored with the training split's global
+    // mean, clamped into [1,5]
+    import scala.jdk.CollectionConverters._
+    val trainRatings = java.nio.file.Files.readAllLines(tr).asScala
+      .map(_.split("\t")(2).toDouble)
+    val globalMean = math.max(1.0, math.min(5.0, trainRatings.sum / trainRatings.size))
+    val cold = fields.filter(f => f(0) == "999" && f(1) == "999")
+    assert(cold.length === 1)
+    assert(BigDecimal(cold.head(3)) === BigDecimal(globalMean).setScale(4,
+      BigDecimal.RoundingMode.HALF_UP))
+    // the MAE observed on the write agrees with the sink's abs-diff column
+    val sinkMae = fields.map(_(4).toDouble).sum / fields.length
+    assert(math.abs(res.mae - sinkMae) < 1e-4, s"observed MAE ${res.mae} != sink MAE $sinkMae")
   }
 
   test("headerless TSV ratings reader parses MovieLens-format lines (S1/S2)") {
