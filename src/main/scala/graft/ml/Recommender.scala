@@ -11,8 +11,8 @@ import graft.functions.GraftFunctions._
   * model → scoring join → MAE/RMSE evaluation → predictions sink
   * (SURVEY.md §3 entry points 1-3) — re-expressed Spark-first.
   *
-  * Training is MLlib ALS (`spark_approach` per BASELINE.json), replacing
-  * both the serial driver-only SGD (CalcFeatures,
+  * Training is the blocked ALS of [[Als]] (`spark_approach` per
+  * BASELINE.json), replacing both the serial driver-only SGD (CalcFeatures,
   * SVDMovieLensSparkJava.java:409-449) and the dead accumulator-based
   * distributed twin (spark_CalcFeatures :366-406). The oracle-checked
   * queries use a *deterministic rational factor matrix* instead of
@@ -36,45 +36,30 @@ object Recommender {
   val RegParam = 0.015
   val MaxIter = 10
   val Seed = 42L
-  // Fixed, not derived from parallelism: factor init is seeded per
-  // block, so a fixed count keeps every fit identical at any core count.
-  // MLlib's default is 10 blocks per side. For a 100K-rating, rank-64
-  // fit on 4 task slots (4-vCPU Xeon VM) that meant 3 task waves per
-  // stage: 288 tasks and 65.8 MB of shuffle per pipeline run, with
-  // 3.3-4.1 s in the ALS iteration job. 4 blocks run each stage in one
-  // wave: 114 tasks, 28.4 MB and 2.7 s. At cluster scale this would be
-  // sized to executor slots.
-  val NumBlocks = 4
 
-  /** The one ALS estimator every fit uses: rating columns
-    * user/item/rating, [[RegParam]] (the reference's K), [[Seed]] and
-    * [[NumBlocks]] per side. Cold-start rows are dropped from
-    * `transform`; scoring paths that must keep them join the factor
-    * tables themselves (RecommenderPipeline.run).
+  /** The one ALS fit every caller uses: [[Als]] on the columns
+    * user/item/rating with [[RegParam]] (the reference's K) and [[Seed]],
+    * one block per task slot (the factors do not depend on the block
+    * count). The returned factors stay persisted until the caller
+    * unpersists the model.
     */
-  def als(rank: Int = Rank, maxIter: Int = MaxIter): org.apache.spark.ml.recommendation.ALS =
-    new org.apache.spark.ml.recommendation.ALS()
-      .setUserCol("user").setItemCol("item").setRatingCol("rating")
-      .setRank(rank).setRegParam(RegParam).setMaxIter(maxIter).setSeed(Seed)
-      .setNumUserBlocks(NumBlocks).setNumItemBlocks(NumBlocks)
-      .setColdStartStrategy("drop")
+  def als(train: DataFrame, rank: Int = Rank, maxIter: Int = MaxIter,
+      onIteration: (Int, Double) => Unit = null): Als.Model =
+    Als.fit(train, rank, maxIter, RegParam, Seed,
+      train.sparkSession.sparkContext.defaultParallelism, onIteration)
 
   /** One ALS fit per (sfDir) — q36 (train+evaluate) and q38 (serve) share
     * the trained model instead of re-fitting, the same way a production
-    * pipeline trains once and serves many. The cache key is
-    * (SparkContext, data dir) — see [[graft.Memo]]; hyperparameters are
-    * fixed per SURVEY §2 O3 (rank 8 = the reference's feature count
-    * scaled to fixture size, regParam = the reference's K).
+    * pipeline trains once and serves many; its factors stay persisted
+    * for the life of the memo. The cache key is (SparkContext, data
+    * dir) — see [[graft.Memo]]; hyperparameters are fixed per SURVEY §2
+    * O3 (rank 8 = the reference's feature count scaled to fixture size,
+    * regParam = the reference's K).
     */
-  private val modelCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.ml.recommendation.ALSModel]
+  private val modelCache = scala.collection.concurrent.TrieMap.empty[String, Als.Model]
 
-  private[graft] def alsModel(s: SparkSession, dir: String): org.apache.spark.ml.recommendation.ALSModel =
-    graft.Memo.sync(modelCache, graft.Memo.key(s, dir))( {
-      val r = trainInput(s, dir).cache()
-      try als().fit(r)
-      finally r.unpersist()
-    })
+  private[graft] def alsModel(s: SparkSession, dir: String): Als.Model =
+    graft.Memo.sync(modelCache, graft.Memo.key(s, dir))(als(trainInput(s, dir)))
 
   private[graft] def trainInput(s: SparkSession, dir: String): DataFrame =
     ratings(s, dir)
@@ -278,19 +263,19 @@ object Recommender {
       .orderBy(col("user_id"), col("item_id"), col("line"))
   }
 
-  /** q36 — ALS train + score (O2/O3 replaced by
-    * org.apache.spark.ml.recommendation.ALS): rank 8, regParam 0.015
-    * (the reference's K, SVDMovieLensSparkJava.java:43), fixed seed.
-    * Factor init is seeded per block and the block count is fixed
-    * ([[NumBlocks]]), so rows repeat at any core count; learned factors
-    * have no DuckDB twin, so it is rows-only for the driver and the
-    * ScalaTest spec asserts holdout MAE beats the q32 baseline.
+  /** q36 — ALS train + score (O2/O3 replaced by [[Als]]): rank 8,
+    * regParam 0.015 (the reference's K, SVDMovieLensSparkJava.java:43),
+    * fixed seed, scored by the factor-table joins of [[Als.Model.predict]]
+    * (an inner join: cold-start pairs are dropped). The factors do not
+    * depend on block or core count, so the rows repeat at any core
+    * count; learned factors have no DuckDB twin, so it is rows-only for
+    * the driver and the ScalaTest spec asserts MAE beats the q32
+    * baseline.
     */
   val q36 = rowsOnly(
     "q36_als_recommender",
-    "MLlib ALS rank-8 train + broadcast-scored predictions + MAE") { (s, dir) =>
-    val model = alsModel(s, dir)
-    model.transform(trainInput(s, dir))
+    "ALS rank-8 train + broadcast-scored predictions + MAE") { (s, dir) =>
+    alsModel(s, dir).predict(trainInput(s, dir))
       .agg(
         count(lit(1)).as("n_predictions"),
         avg(abs(col("rating") - clamp(col("prediction"), 1.0, 5.0))).as("mae"))
@@ -347,12 +332,6 @@ object Recommender {
   }
 
   /** q38 — the recommender's end product: top-5 item recommendations per
-    * user from the ALS model (`recommendForAllUsers` — blocked cross
-    * product of factor matrices with per-user top-k, the scalable
-    * serving-side batch job). Rows-only (factor values are seed+
-    * partitioning dependent); the count contract is n_users × 5.
-    */
-  /** q38 — the recommender's end product: top-5 item recommendations per
     * user. Serving is a broadcast join of the (bounded) item-factor
     * matrix against the user-factor matrix with a codegen'd dot product
     * and a per-user top-k window — the same blocked-crossproduct shape
@@ -361,6 +340,8 @@ object Recommender {
     * scheduling for <1 MB of math. At 100 TB the item side stays the
     * broadcast side (items are the bounded dimension); the user side
     * streams through map-side scoring with no shuffle before the top-k.
+    * Rows-only (learned factors have no DuckDB twin); the count contract
+    * is n_users × 5.
     */
   val q38 = rowsOnly(
     "q38_als_recommendations",

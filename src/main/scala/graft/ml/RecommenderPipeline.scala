@@ -3,7 +3,6 @@ package graft.ml
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions.clamp
-import graft.functions.VecOps
 import graft.sources.Tables
 
 /** Drop-in replacement for the reference's `main()` flow
@@ -13,15 +12,15 @@ import graft.sources.Tables
   *
   * A reference user switches by calling
   * `RecommenderPipeline.run(spark, "u.data", "u1.test", outDir)` — same
-  * three inputs, same outputs, same metric — with training now MLlib ALS
-  * ([[Recommender.als]]: 64 features, the reference's regularization
-  * K=0.015, fixed seed, a fixed [[Recommender.NumBlocks]] per side)
-  * instead of 768M serial driver-side SGD updates. Scoring is two
-  * broadcast left joins of the user and item factor tables onto the test
-  * split with a codegen'd dot product, instead of a hand-rolled closure
-  * lookup. Count and MAE are observed on the TSV write itself
-  * (`Dataset.observe`), so the scored rows are computed once and never
-  * cached or re-read.
+  * three inputs, same outputs, same metric — with training now the
+  * blocked ALS of [[Recommender.als]] (64 features, the reference's
+  * regularization K=0.015, fixed seed, one block per task slot) instead
+  * of 768M serial driver-side SGD updates. Scoring is two broadcast left
+  * joins of the user and item factor tables onto the test split with a
+  * codegen'd dot product ([[Als.Model.predict]]), instead of a
+  * hand-rolled closure lookup. Count and MAE are observed on the TSV
+  * write itself (`Dataset.observe`), so the scored rows are computed
+  * once and never cached or re-read.
   */
 object RecommenderPipeline {
 
@@ -35,41 +34,23 @@ object RecommenderPipeline {
     */
   final case class IterationMetric(iter: Int, rmse: Double, delta: Double)
 
-  /** Convergence telemetry for the ALS fit. MLlib ALS exposes no mid-fit
-    * hook, but with a FIXED seed the fit is deterministic given (data,
-    * params, blocks): the model fitted at `maxIter = i` IS the state
-    * after i iterations of the same trajectory. Refitting at 1..maxIter
-    * therefore reconstructs the exact per-epoch RMSE curve the
-    * reference's training loop printed. Cost is maxIter small fits —
-    * appropriate for a telemetry/diagnostic API at fixture scale; a
-    * 100 TB pipeline would checkpoint factor matrices per iteration and
-    * evaluate those instead (same observable, amortized cost).
-    *
-    * Every fit is [[Recommender.als]] at rank [[Recommender.Rank]], and
-    * it returns the final-iteration model, so the caller can verify the
+  /** Convergence telemetry for the ALS fit: one [[Recommender.als]] fit
+    * at rank [[Recommender.Rank]] whose per-iteration observer reports
+    * the training RMSE after every iteration — the per-epoch curve the
+    * reference's training loop printed. Returns the fitted model too
+    * (persisted; the caller unpersists it), so the caller can verify the
     * curve's endpoint matches q36's production fit (RecommenderSpec).
     */
-  def trainingCurve(spark: SparkSession, train: DataFrame,
-      maxIter: Int = Recommender.MaxIter)
-      : (Seq[IterationMetric], org.apache.spark.ml.recommendation.ALSModel) = {
-    import org.apache.spark.ml.recommendation.ALSModel
-    require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
-    val t = train.cache()
-    try {
-      var prev = Double.NaN
-      var lastModel: ALSModel = null
-      val metrics = (1 to maxIter).map { i =>
-        val m = Recommender.als(maxIter = i).fit(t)
-        val rmse = m.transform(t)
-          .agg(sqrt(avg(pow(col("rating") - col("prediction"), 2)))).head().getDouble(0)
-        val d = prev - rmse
-        prev = rmse
-        lastModel = m
-        log.info(f"[als] iter $i%2d rmse $rmse%.6f delta $d%.6f") // the reference's printout shape
-        IterationMetric(i, rmse, d)
-      }
-      (metrics, lastModel)
-    } finally t.unpersist()
+  def trainingCurve(train: DataFrame, maxIter: Int = Recommender.MaxIter)
+      : (Seq[IterationMetric], Als.Model) = {
+    val rmse = scala.collection.mutable.ArrayBuffer.empty[Double]
+    val model = Recommender.als(train, maxIter = maxIter, onIteration = (_, r) => rmse += r)
+    val metrics = rmse.indices.map { i =>
+      val d = if (i == 0) Double.NaN else rmse(i - 1) - rmse(i)
+      log.info(f"[als] iter ${i + 1}%2d rmse ${rmse(i)}%.6f delta $d%.6f") // the reference's printout shape
+      IterationMetric(i + 1, rmse(i), d)
+    }
+    (metrics, model)
   }
 
   def run(spark: SparkSession, trainPath: String, testPath: String,
@@ -77,13 +58,14 @@ object RecommenderPipeline {
     // Entry point 1 — LoadHistory (:185-223): parallel TSV ingest. The
     // per-entity stats the reference collected to driver arrays stay
     // relational (q30/q31 shapes) and are not needed for ALS itself.
-    // Cached for the fit's passes and the global mean, released below.
+    // Cached for the fit's block building and the global mean, released below.
     val train = ratingsTsv(spark, trainPath).cache()
+    var model: Als.Model = null
     try {
-      // Entry point 2 — CalcFeatures (:409-449) replaced by ALS.fit:
-      // the blocked alternating-least-squares epoch protocol is what the
-      // dead spark_CalcFeatures path (:366-406) was reaching for.
-      val model = Recommender.als(rank, maxIter).fit(train)
+      // Entry point 2 — CalcFeatures (:409-449) replaced by the blocked
+      // alternating-least-squares epoch protocol the dead
+      // spark_CalcFeatures path (:366-406) was reaching for.
+      model = Recommender.als(train, rank, maxIter)
       val globalMean = train.agg(avg(col("rating"))).head().getDouble(0)
 
       // Entry point 3 — ProcessTest (:452-471): score the holdout, clamp
@@ -92,14 +74,9 @@ object RecommenderPipeline {
       // factor row gives a null dot -> prior is strictly saner). Both
       // factor tables are bounded by the entity counts, so they ride as
       // broadcasts and the test split streams through without a shuffle.
-      val users = model.userFactors.select(col("id").as("user"), col("features").as("uf"))
-      val items = model.itemFactors.select(col("id").as("item"), col("features").as("if"))
-      val scored = ratingsTsv(spark, testPath)
-        .join(broadcast(users), Seq("user"), "left")
-        .join(broadcast(items), Seq("item"), "left")
+      val scored = model.predict(ratingsTsv(spark, testPath), "left")
         .select(col("user").as("user_id"), col("item").as("item_id"), col("rating"),
-          clamp(coalesce(VecOps.dotF(col("uf"), col("if")), lit(globalMean)), 1.0, 5.0)
-            .as("pred"))
+          clamp(coalesce(col("prediction"), lit(globalMean)), 1.0, 5.0).as("pred"))
 
       // write TSV and report count + MAE from the same pass
       val metrics = Observation("pipeline")
@@ -113,7 +90,10 @@ object RecommenderPipeline {
       log.info(s"Number of predictions: ${result.nPredictions}") // reference :470's printout shape
       log.info(f"Avg Abs(diff): ${result.mae}%.4f")
       result
-    } finally train.unpersist()
+    } finally {
+      train.unpersist()
+      if (model != null) model.unpersist()
+    }
   }
 
   private def ratingsTsv(spark: SparkSession, path: String): DataFrame =

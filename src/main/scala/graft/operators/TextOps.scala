@@ -1334,10 +1334,10 @@ object TextOps {
     // empty top (pair-free stream) takes the full formula, whose
     // crossJoin with the empty frame yields the same empty result as
     // before.
-    val pairSelfEqual = top.collect().headOption
+    val needsRunOffset = top.collect().headOption
       .forall(r => r.getString(0) == r.getString(1))
     val vbase = nx.crossJoin(broadcast(top))
-    val v = if (pairSelfEqual) {
+    val v = if (needsRunOffset) {
       vbase
         // run offset: p − last run start (a running max — no extra shuffle)
         .withColumn("off", col("p") -

@@ -84,8 +84,8 @@ object ClusterStream {
     * holds); the streaming sink, whose docs arrive as text, goes
     * through [[step]] and computes them. `batchIds`: the batch's doc
     * ids (one row per doc), used for the keep-labels anti-join.
-    */
-  /** @param eagerOutputs when true (the streaming path), both returned
+    *
+    * @param eagerOutputs when true (the streaming path), both returned
     *  frames are EAGER checkpoints — processBatch overwrites the
     *  parquet paths they were read from, so they must be materialized
     *  before the write. The in-memory replay fold (q256) passes false:

@@ -57,10 +57,11 @@ class RecommenderSpec extends AnyFunSuite {
     val r = rows.toDF("user", "item", "rating", "fold")
     val train = r.filter(col("fold") =!= 0).cache()
     val test = r.filter(col("fold") === 0).cache()
-    val model = Recommender.als(rank = 64).fit(train)
-    val alsMae = model.transform(test) // cold-start rows dropped
+    val model = Recommender.als(train, rank = 64)
+    val alsMae = model.predict(test) // the inner join drops cold-start rows
       .agg(avg(abs(col("rating") - clampF(col("prediction"), 1.0, 5.0))))
       .head().getDouble(0)
+    model.unpersist()
     val trainStats = train.groupBy(col("item"))
       .agg(clampF(pseudoAvg(sum(col("rating")).cast("double"), count(lit(1))), 1.0, 5.0)
         .as("pred"))
@@ -115,9 +116,13 @@ class RecommenderSpec extends AnyFunSuite {
     trW.close(); teW.close()
     val out = dir.resolve("preds").toString
     spark.catalog.clearCache() // safe between runs, as Verify and Bench do
+    // earlier tests' memos (q36's factors) stay pinned on purpose
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val res = RecommenderPipeline.run(spark, tr.toString, te.toString, out,
       rank = 8, maxIter = 5)
     assert(spark.sharedState.cacheManager.isEmpty, "the pipeline run left a Dataset cached")
+    assert(spark.sparkContext.getPersistentRDDs.keySet === persistedBefore,
+      "the pipeline run left an RDD persisted")
     assert(res.nPredictions === 201)
     assert(res.mae > 0.0 && res.mae < 1.2,
       s"pipeline MAE ${res.mae} should beat a random predictor")
@@ -178,7 +183,7 @@ class RecommenderSpec extends AnyFunSuite {
   test("training telemetry reconstructs the convergence curve; endpoint matches q36's fit") {
     import graft.ml.RecommenderPipeline
     val train = Recommender.trainInput(spark, sfDir)
-    val (curve, model) = RecommenderPipeline.trainingCurve(spark, train, maxIter = 10)
+    val (curve, model) = RecommenderPipeline.trainingCurve(train, maxIter = 10)
     assert(curve.map(_.iter) === (1 to 10))
     assert(curve.forall(m => m.rmse > 0 && java.lang.Double.isFinite(m.rmse)))
     assert(curve.last.rmse < curve.head.rmse,
@@ -187,11 +192,12 @@ class RecommenderSpec extends AnyFunSuite {
     curve.sliding(2).foreach { case Seq(a, b) =>
       assert(math.abs(b.delta - (a.rmse - b.rmse)) < 1e-12, s"delta inconsistent at iter ${b.iter}")
     }
-    // same seed + params + blocks => the 10-iter refit is the SAME
-    // trajectory as q36's memoized production fit
+    // same seed + params => the observed fit is the SAME trajectory as
+    // q36's memoized production fit
     val q36mae = Recommender.q36.run(spark, sfDir).select(col("mae")).head().getDouble(0)
-    val mae = model.transform(train)
+    val mae = model.predict(train)
       .agg(avg(abs(col("rating") - clamp(col("prediction"), 1.0, 5.0)))).head().getDouble(0)
+    model.unpersist()
     assert(math.abs(mae - q36mae) < 1e-9,
       s"telemetry endpoint MAE $mae != q36 MAE $q36mae")
   }
