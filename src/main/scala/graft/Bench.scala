@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark harness: one JSON line of per-query wall-clock seconds.
   *
@@ -62,11 +61,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // no-op for the µs fixture; keeps a ns-encoded events file readable
+    val spark = GraftSession.builder(cpus.toInt)
       // artifact-write codec A/B knob (r15 VERDICT #7): default snappy
       // (Spark's default); zstd trades write CPU for bytes — measured
       // for the sf3 pair-table artifact in BUILDLOG r16

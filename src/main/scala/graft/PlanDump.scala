@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dumps the formatted physical plan of every registered query to a
   * markdown artifact — the ".explain and iterate" evidence trail
@@ -16,13 +15,7 @@ object PlanDump {
     // optional third arg: comma-separated query names (fast iteration on
     // one plan — same convention as Bench's filter)
     val only = args.lift(2).map(_.split(',').toSet)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // no-op for the µs fixture; keeps a ns-encoded events file readable
-      .getOrCreate()
+    val spark = GraftSession.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of every registered query\n\n")

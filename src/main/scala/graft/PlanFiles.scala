@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Writes `.explain("formatted")` output for selected queries to one
   * file per query — the optimization round's plan evidence trail
@@ -18,13 +17,7 @@ object PlanFiles {
     val outDir = args(1)
     val tag = args(2)
     val names = args(3).split(',').toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     SparkEntry.registry.filter(q => names.contains(q.name)).foreach { q =>

@@ -50,11 +50,8 @@ object SkewBench {
 
   private def sessionFor(variant: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val s = GraftSession.builder(cpus.toInt)
       .appName(s"graft-skew-$variant")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
       .newSession()
     s.sparkContext.setLogLevel("WARN")

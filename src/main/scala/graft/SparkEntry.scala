@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
+  // A host asks for queries before it builds its session (see
+  // GraftSession.installJvmDefaults).
+  GraftSession.installJvmDefaults()
 
   /** Every implemented engine query, module by module (SURVEY.md §2). */
   def registry: Seq[GQuery] =

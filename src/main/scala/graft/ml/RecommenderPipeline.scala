@@ -106,13 +106,8 @@ object RecommenderPipeline {
     val Array(trainPath, testPath, outPath) = args.take(3)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = graft.GraftSession.builder(cpus.toInt)
       .appName("graft-recommender")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // no-op for the µs fixture; keeps a ns-encoded events file readable
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     run(spark, trainPath, testPath, outPath)

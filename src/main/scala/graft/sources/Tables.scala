@@ -1,12 +1,19 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loaders for the driver-generated fixtures (TESTDATA.md).
   *
-  * Parquet is self-describing, so no schema is forced on read — Catalyst
-  * gets full pushdown + pruning on the scan (`PushedFilters`/`ReadSchema`
-  * in explain). At 100 TB these would be partitioned tables behind a
+  * Parquet is self-describing: the schema comes from the file's footer
+  * (inferred once per file, see [[apply]]), and Catalyst gets full
+  * pushdown + pruning on the scan (`PushedFilters`/`ReadSchema` in
+  * explain). At 100 TB these would be partitioned tables behind a
   * catalog; the single-file layout here is the fixture shape only, and
   * nothing below assumes a row count or a single partition.
   */
@@ -15,8 +22,40 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Inferring a parquet schema runs a one-task job that reads a footer,
+    * so it runs once per table file: later reads pass the schema it found
+    * while the file and the session's parquet settings are unchanged.
+    */
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val stamp = Stamp(spark, path)
+    Option(schemas.get(path)).filter(c => stamp.contains(c._1)) match {
+      case Some((_, schema)) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        stamp.foreach(st => schemas.put(path, (st, df.schema)))
+        df
+    }
+  }
+
+  /** What an inferred schema depends on: every file under the path with
+    * its length and modification time, so a rewritten table is read again,
+    * and the session's parquet settings, which change how footer types map
+    * to Spark's (`nanosAsLong`, `binaryAsString`, ...). `None` when the
+    * path cannot be listed; the read then reports why.
+    */
+  private final case class Stamp(files: Seq[(String, Long, Long)], conf: Map[String, String])
+  private object Stamp {
+    def apply(spark: SparkSession, path: String): Option[Stamp] = Try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val st = fs.getFileStatus(p)
+      val files = (if (st.isDirectory) fs.listStatus(p).toSeq else Seq(st))
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sortBy(_._1)
+      Stamp(files, spark.conf.getAll.filter(_._1.contains("parquet")))
+    }.toOption
+  }
+  private val schemas = new ConcurrentHashMap[String, (Stamp, StructType)]()
 
   def region(s: SparkSession, d: String): DataFrame = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = apply(s, d, "nation")

@@ -22,16 +22,20 @@ class IngestSpec extends AnyFunSuite {
     .getOrCreate()
 
   test("q92 PERMISSIVE ingest survives corrupt rows and accounts for every line") {
-    val row = Ingest.q92.run(spark, sfDir).head() // must NOT throw
-    val (nLines, nGood, nBad) = (row.getLong(0), row.getLong(1), row.getLong(2))
-    assert(nLines === nGood + nBad, "every line is either good or bad")
-    assert(nBad > 0, "fixture derivation must actually produce corrupt rows")
-    assert(nGood > 0)
     // corruption rule is a pure function of doc_id — recompute expectation
     val docs = graft.sources.Tables.documents(spark, sfDir)
     val expectedBad = docs
       .filter(col("doc_id") % 7 === 3 || col("doc_id") % 11 === 5).count()
-    assert(nBad === expectedBad)
+    // a second run after clearCache, as Verify and Bench run it
+    for (_ <- 1 to 2) {
+      val row = Ingest.q92.run(spark, sfDir).head() // must NOT throw
+      val (nLines, nGood, nBad) = (row.getLong(0), row.getLong(1), row.getLong(2))
+      assert(nLines === nGood + nBad, "every line is either good or bad")
+      assert(nBad > 0, "fixture derivation must actually produce corrupt rows")
+      assert(nGood > 0)
+      assert(nBad === expectedBad)
+      spark.catalog.clearCache()
+    }
   }
 
   test("FAILFAST read of the same dirty file throws (the reference's semantics)") {

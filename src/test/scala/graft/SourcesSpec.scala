@@ -55,4 +55,32 @@ class SourcesSpec extends AnyFunSuite {
     assert(rows.length === 2)
     assert(rows.count(_.isNullAt(0)) === 1)
   }
+
+  test("a table's parquet schema is inferred once per file version") {
+    import graft.sources.Tables
+    val tmp = java.nio.file.Files.createTempDirectory("schemas").toString
+    spark.range(5).toDF("a").write.parquet(s"$tmp/t.parquet")
+    // jobs started by `body`, read once a later marker job is visible
+    // (the status store takes job events in order)
+    val sc = spark.sparkContext
+    def inGroup(g: String)(body: => Unit): Unit = {
+      sc.setJobGroup(g, g); try body finally sc.clearJobGroup()
+    }
+    def jobs(group: String)(body: => Unit): Int = {
+      inGroup(group)(body)
+      inGroup(s"$group-end")(spark.range(1).count())
+      val deadline = System.nanoTime() + 10000000000L
+      while (sc.statusTracker.getJobIdsForGroup(s"$group-end").isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    val inferred = spark.read.parquet(s"$tmp/t.parquet").schema
+    assert(jobs("infer")(Tables(spark, tmp, "t")) >= 1)
+    assert(jobs("reuse")(assert(Tables(spark, tmp, "t").schema === inferred)) === 0)
+    spark.range(3).selectExpr("id AS b", "id * 2 AS c").write.mode("overwrite")
+      .parquet(s"$tmp/t.parquet")
+    val df = Tables(spark, tmp, "t")
+    assert(df.columns.toSeq === Seq("b", "c"))
+    assert(df.count() === 3)
+  }
 }
