@@ -28,6 +28,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * (`(h*a_i + b_i) mod p`, p = 1e9+7) reduced mod `width`, so the
   * estimate side can recompute cell indices with plain built-in
   * arithmetic (`pmod`) — no scalar companion function needed.
+  *
+  * Why not Spark's built-in `count_min_sketch` (checked against Spark
+  * 4.1.2): it returns an opaque serialized `binary` and Spark exposes
+  * no function that reads its individual cells. q182's join-size
+  * estimate is the row-wise inner product of two sketches' cell grids,
+  * which needs the counters as an array.
   */
 case class CountMinAgg(
     child: Expression,

@@ -20,10 +20,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * Randomized sketches (DataSketches KLL/REQ, t-digest) flip coins in
   * compaction, so their output is not a pure function of the input and
   * their bounds hold only with probability — both disqualifying for
-  * this engine's bit-reproducible gate (contrast [[ThetaSketchAgg]],
-  * whose canonical cutback IS deterministic). Here compaction keeps the
-  * ODD-indexed half of a sorted even-size buffer — no randomness — and
-  * the state carries its own accumulated worst-case rank-error bound:
+  * this engine's bit-reproducible gate (contrast Spark's built-in
+  * `theta_sketch_agg`, whose canonical cutback IS deterministic). Here
+  * compaction keeps the ODD-indexed half of a sorted even-size buffer —
+  * no randomness — and the state carries its own accumulated worst-case
+  * rank-error bound:
   *
   *   - level l holds a sorted buffer of items with weight 2^l, at most
   *     `k` per level; inserts land in level 0;
@@ -51,6 +52,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * canonical across partitionings) — so queries must gate on the
   * always-true bound contract and keep the values internal, exactly
   * the discipline the probabilistic sketches already follow.
+  *
+  * Why not Spark's built-in `kll_sketch_agg_*` / `kll_sketch_get_*`
+  * (checked against Spark 4.1.2): KLL compacts by a random coin flip per
+  * compaction, so it carries no deterministic rank certificate — its
+  * error is a confidence statement, and the returned quantiles change
+  * with the merge tree's coins. q217's gate checks a bound that must
+  * hold on every run, which only this certificate-carrying state gives.
   */
 case class MrlQuantileAgg(
     child: Expression,

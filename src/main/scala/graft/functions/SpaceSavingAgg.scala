@@ -43,6 +43,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   *
   * Output: flattened `[key, est, err]` triples sorted by
   * (est desc, err asc, key asc).
+  *
+  * Why not Spark's built-in `approx_top_k` (checked against Spark
+  * 4.1.2): it returns only `array<struct<item, count>>`, with no per-key
+  * error. q199's contract needs `err` per key — the `est − err ≤ true`
+  * check and the `missed_heavy` count both read it — so the built-in
+  * cannot state the bound the gate verifies.
   */
 case class SpaceSavingAgg(
     child: Expression,

@@ -274,26 +274,27 @@ object SetOps {
           .as("within_eps"))
   }
 
-  /** q215 — distinct-count SET ALGEBRA via native theta sketches
-    * ([[graft.functions.ThetaSketchAgg]]): per-day purchase/error
-    * audience overlap. HLL (q19/q176) can only estimate |A| and |A∪B|;
-    * the theta retained-hash set also answers |A∩B| and |A∖B| — the
-    * overlap/exclusive-reach questions segment analytics ask — in one
-    * constant-state mergeable aggregate per segment, where the exact
-    * answer at 100 TB would shuffle the full user domain per segment
-    * PAIR. The per-(day,user) pre-aggregation level both feeds the
-    * sketches distinct keys and carries the exact audit track in the
-    * SAME shuffle (no second pass); every estimate crosses the gate as
-    * a ±3σ bound boolean against its exact count (the q19/q176/q182
-    * contract pattern — estimates stay internal, output is
-    * exact-arithmetic). lgNom=6 (64 entries): per-type sketches are
-    * exact below sf0.1 but the UNION sketch estimates from sf0.01 up
-    * and everything estimates at sf0.1 (~530 users/day) — the bound
-    * contract is exercised for real, not vacuously exact. (lgNom=5 was
-    * measured first: day 2's purchase estimate landed just past its 3σ
-    * lower bound at sf0.01 — a legitimate ~0.3%-probability tail draw,
-    * not a bug; one size up, every bound holds at all three fixtures,
-    * and determinism freezes that outcome.)
+  /** q215 — distinct-count SET ALGEBRA via Spark's built-in theta
+    * sketches (`theta_sketch_agg`, `theta_intersection`, `theta_union`,
+    * `theta_difference`; bounds via [[graft.functions.ThetaInBounds]]):
+    * per-day purchase/error audience overlap. HLL (q19/q176) can only
+    * estimate |A| and |A∪B|; the theta retained-hash set also answers
+    * |A∩B| and |A∖B| — the overlap/exclusive-reach questions segment
+    * analytics ask — in one constant-state mergeable aggregate per
+    * segment, where the exact answer at 100 TB would shuffle the full
+    * user domain per segment PAIR. The per-(day,user) pre-aggregation
+    * level both feeds the sketches distinct keys and carries the exact
+    * audit track in the SAME shuffle (no second pass); every estimate
+    * crosses the gate as a ±3σ bound boolean against its exact count
+    * (the q19/q176/q182 contract pattern — estimates stay internal,
+    * output is exact-arithmetic). lgNom=6 (64 entries): per-type
+    * sketches are exact below sf0.1 but the UNION sketch estimates from
+    * sf0.01 up and everything estimates at sf0.1 (~530 users/day) — the
+    * bound contract is exercised for real, not vacuously exact.
+    * (lgNom=5 was measured first: day 2's purchase estimate landed just
+    * past its 3σ lower bound at sf0.01 — a legitimate ~0.3%-probability
+    * tail draw, not a bug; one size up, every bound holds at all three
+    * fixtures, and determinism freezes that outcome.)
     */
   val q215 = oracled(
     "q215_theta_set_algebra",
@@ -315,8 +316,6 @@ object SetOps {
          TRUE AS inter_in_bounds, TRUE AS union_in_bounds,
          TRUE AS diff_in_bounds
        FROM u GROUP BY day ORDER BY day""") { (s, dir) =>
-    import graft.functions.ThetaSketchAgg.thetaSketchAgg
-    import graft.functions.ThetaSetOp.{thetaANotB, thetaIntersect, thetaUnion}
     import graft.functions.ThetaInBounds.thetaInBounds
     val perUser = Tables.events(s, dir)
       .filter(col("event_type").isin("purchase", "error"))
@@ -334,20 +333,20 @@ object SetOps {
         count(lit(1)).cast("long").as("n_either"),
         sum(when(col("has_pur") === 1 && col("has_err") === 0, 1)
           .otherwise(0)).cast("long").as("n_pur_only"),
-        thetaSketchAgg(when(col("has_pur") === 1, col("user_id")), 6)
+        theta_sketch_agg(when(col("has_pur") === 1, col("user_id")), 6)
           .as("sk_pur"),
-        thetaSketchAgg(when(col("has_err") === 1, col("user_id")), 6)
+        theta_sketch_agg(when(col("has_err") === 1, col("user_id")), 6)
           .as("sk_err"))
     daily.select(
       col("day"), col("n_purchase"), col("n_error"), col("n_both"),
       col("n_either"), col("n_pur_only"),
       thetaInBounds(col("sk_pur"), col("n_purchase"), 3).as("pur_in_bounds"),
       thetaInBounds(col("sk_err"), col("n_error"), 3).as("err_in_bounds"),
-      thetaInBounds(thetaIntersect(col("sk_pur"), col("sk_err")),
+      thetaInBounds(theta_intersection(col("sk_pur"), col("sk_err")),
         col("n_both"), 3).as("inter_in_bounds"),
-      thetaInBounds(thetaUnion(col("sk_pur"), col("sk_err")),
+      thetaInBounds(theta_union(col("sk_pur"), col("sk_err")),
         col("n_either"), 3).as("union_in_bounds"),
-      thetaInBounds(thetaANotB(col("sk_pur"), col("sk_err")),
+      thetaInBounds(theta_difference(col("sk_pur"), col("sk_err")),
         col("n_pur_only"), 3).as("diff_in_bounds"))
       .orderBy(col("day"))
   }
@@ -393,15 +392,13 @@ object SetOps {
        JOIN d d2 ON d2.day = d1.day + 1
        LEFT JOIN r ON r.day = d1.day
        ORDER BY day""") { (s, dir) =>
-    import graft.functions.ThetaSketchAgg.thetaSketchAgg
-    import graft.functions.ThetaSetOp.thetaIntersect
     import graft.functions.ThetaInBounds.thetaInBounds
     val perUser = Tables.events(s, dir)
       .select(col("ts").cast("date").as("day"), col("user_id"))
       .distinct()
     val daily = perUser.groupBy(col("day"))
       .agg(count(lit(1)).cast("long").as("n_active"),
-        thetaSketchAgg(col("user_id"), 7).as("sk"))
+        theta_sketch_agg(col("user_id"), 7).as("sk"))
     val exactRet = perUser.as("a")
       .join(perUser.as("b"),
         col("b.user_id") === col("a.user_id") &&
@@ -415,7 +412,7 @@ object SetOps {
       .join(exactRet, col("rday") === col("day"), "left")
       .select(col("day"), col("n_active"), col("n_active_next"),
         coalesce(col("n_retained"), lit(0L)).as("n_retained"),
-        thetaInBounds(thetaIntersect(col("sk"), col("sk_next")),
+        thetaInBounds(theta_intersection(col("sk"), col("sk_next")),
           coalesce(col("n_retained"), lit(0L)), 3).as("retained_in_bounds"))
       .orderBy(col("day"))
   }
@@ -526,7 +523,7 @@ object SetOps {
     * answer incrementally (distinct doesn't subtract), solved the way a
     * 100 TB deployment does — build one theta sketch per day (q216's
     * persisted-table pattern), then UNION-MERGE 7 sketch rows per
-    * window with [[graft.functions.ThetaMergeAgg]]. The rolling pass
+    * window with Spark's built-in `theta_union_agg`. The rolling pass
     * touches only the tiny sketch table: each daily sketch explodes to
     * the ≤7 window days it serves (a bounded equi-join — no range
     * join), and the union's canonical cutback keeps the merged bytes a
@@ -550,8 +547,6 @@ object SetOps {
          TRUE AS in_bounds
        FROM win w JOIN wd ON wd.wday = w.wday
        GROUP BY 1, 2 ORDER BY day""") { (s, dir) =>
-    import graft.functions.ThetaSketchAgg.thetaSketchAgg
-    import graft.functions.ThetaMergeAgg.thetaMergeAgg
     import graft.functions.ThetaInBounds.thetaInBounds
     val lgNom = 8
     val pu = Tables.events(s, dir)
@@ -560,7 +555,7 @@ object SetOps {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val days1 = pu.select(col("day")).distinct()
     val daily = pu.groupBy(col("day"))
-      .agg(thetaSketchAgg(col("user_id"), lgNom).as("sk"))
+      .agg(theta_sketch_agg(col("user_id"), lgNom).as("sk"))
     def toWindows(df: org.apache.spark.sql.DataFrame) = df
       .select(explode(sequence(col("day"), date_add(col("day"), 6)))
           .as("wday") +: df.columns.filter(_ != "day").map(col): _*)
@@ -568,7 +563,7 @@ object SetOps {
         "left_semi")
     val sk7 = toWindows(daily)
       .groupBy(col("wday"))
-      .agg(thetaMergeAgg(col("sk"), lgNom).as("wsk"),
+      .agg(theta_union_agg(col("sk"), lgNom).as("wsk"),
         count(lit(1)).as("win_days"))
     val exact = toWindows(pu)
       .groupBy(col("wday"))

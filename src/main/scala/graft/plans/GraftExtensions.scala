@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{AmsF2Agg, DotProduct, NormalizeText, RollingHash, SortedIntersectCount, ThetaInBounds, ThetaMergeAgg, ThetaSetOp, ThetaSketchAgg}
+import graft.functions.{AmsF2Agg, DotProduct, NormalizeText, RollingHash, SortedIntersectCount, ThetaInBounds}
 
 /** Registers graft's native Catalyst expressions as SQL functions, so
   * `spark.sql("SELECT rolling_hash(text) ...")` works alongside the
@@ -58,47 +58,15 @@ object GraftExtensions {
     ("nfc_normalize",
       info("nfc_normalize", "nfc_normalize(str) - Unicode NFC canonicalization"),
       arity("nfc_normalize", 1)(es => NormalizeText(es.head, "NFC"))),
-    ("theta_intersect",
-      info("theta_intersect",
-        "theta_intersect(sk, sk) - intersection of two theta sketches (bytes)"),
-      arity("theta_intersect", 2)(es => ThetaSetOp(es(0), es(1), "intersect"))),
-    ("theta_union",
-      info("theta_union",
-        "theta_union(sk, sk) - union of two theta sketches (bytes)"),
-      arity("theta_union", 2)(es => ThetaSetOp(es(0), es(1), "union"))),
-    ("theta_anotb",
-      info("theta_anotb",
-        "theta_anotb(sk, sk) - set difference A\\B of two theta sketches (bytes)"),
-      arity("theta_anotb", 2)(es => ThetaSetOp(es(0), es(1), "anotb"))),
     ("theta_in_bounds",
       info("theta_in_bounds",
         "theta_in_bounds(sk, exact) - TRUE iff exact lies in the sketch's 3-sigma bounds"),
       arity("theta_in_bounds", 2)(es => ThetaInBounds(es(0), es(1), 3))),
-    ("theta_sketch_agg",
-      info("theta_sketch_agg",
-        "theta_sketch_agg(key, lgNom) - aggregate: theta sketch of the keys (bytes)"),
-      arity("theta_sketch_agg", 2)(es =>
-        ThetaSketchAgg(es(0), litInt(es(1), "theta_sketch_agg lgNom"))
-          .toAggregateExpression())),
-    ("theta_merge_agg",
-      info("theta_merge_agg",
-        "theta_merge_agg(sk, lgNom) - aggregate: union of a column of sketches (bytes)"),
-      arity("theta_merge_agg", 2)(es =>
-        ThetaMergeAgg(es(0), litInt(es(1), "theta_merge_agg lgNom"))
-          .toAggregateExpression())),
     ("ams_f2_agg",
       info("ams_f2_agg",
         "ams_f2_agg(key) - aggregate: AMS/Count-Sketch F2 (self-join size) estimate, 256 buckets x 5 groups"),
       arity("ams_f2_agg", 1)(es =>
         AmsF2Agg(es.head, 256, 5).toAggregateExpression())))
-
-  /** A constant-foldable int argument (sketch sizes are plan constants,
-    * not data).
-    */
-  private def litInt(e: Expression, what: String): Int = {
-    require(e.foldable, s"$what must be a literal")
-    e.eval().asInstanceOf[Number].intValue
-  }
 
   /** Register on a live session (functionRegistry path). */
   def register(spark: SparkSession): Unit = {

@@ -3,15 +3,12 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.ThetaSketchAgg
-import graft.functions.ThetaSetOp
-
 /** Streaming theta audience sketches: the live twin of q216's batch
   * retention query and the set-algebra extension of [[SketchStream]]'s
   * persistence pattern — one fixed-size DISTINCT-USER sketch PER
   * EVENT-TIME WINDOW, built incrementally by the streaming aggregation
-  * state (the native [[graft.functions.ThetaSketchAgg]] runs inside
-  * Structured Streaming's ObjectHashAggregate exactly as in batch).
+  * state (Spark's built-in `theta_sketch_agg` runs inside Structured
+  * Streaming's ObjectHashAggregate exactly as in batch).
   * Because the emitted bytes are canonical (a pure function of the
   * window's user SET), a sketch built across any number of triggers is
   * BIT-IDENTICAL to the batch sketch of the same window — and the
@@ -36,7 +33,7 @@ object AudienceStream {
   def windowSketches(users: DataFrame, windowDur: String): DataFrame =
     users
       .groupBy(window(col("ts"), windowDur).as("win"))
-      .agg(ThetaSketchAgg.thetaSketchAgg(col("user_id"), LgNom).as("sk"))
+      .agg(theta_sketch_agg(col("user_id"), LgNom).as("sk"))
 
   /** Consecutive-window retention/churn sketches from a PERSISTED
     * sketch table alone (win, sk): window → (sketch of users active in
@@ -51,7 +48,7 @@ object AudienceStream {
       .join(next,
         col("win.start") + expr(s"INTERVAL $windowDur") === col("prev_start"))
       .select(col("win"),
-        ThetaSetOp.thetaIntersect(col("sk"), col("sk_next")).as("sk_retained"),
-        ThetaSetOp.thetaANotB(col("sk"), col("sk_next")).as("sk_churned"))
+        theta_intersection(col("sk"), col("sk_next")).as("sk_retained"),
+        theta_difference(col("sk"), col("sk_next")).as("sk_churned"))
   }
 }

@@ -38,19 +38,17 @@ class ExtensionsSpec extends AnyFunSuite {
   test("theta scalar functions are callable from SQL") {
     GraftExtensions.register(spark)
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, when}
     // 60 keys < 64 nominal: exact mode, so the bound checks are
     // deterministic identities (|A∩B|=31, |A∪B|=60, |A∖B|=29)
     (1L to 60L).toDF("k")
       .agg(
-        graft.functions.ThetaSketchAgg.thetaSketchAgg(col("k"), 6).as("a"),
-        graft.functions.ThetaSketchAgg
-          .thetaSketchAgg(when(col("k") >= 30, col("k")), 6).as("b"))
+        theta_sketch_agg(col("k"), 6).as("a"),
+        theta_sketch_agg(when(col("k") >= 30, col("k")), 6).as("b"))
       .createOrReplaceTempView("theta_ext")
     val r = spark.sql(
-      """SELECT theta_in_bounds(theta_intersect(a, b), 31L) AS i,
+      """SELECT theta_in_bounds(theta_intersection(a, b), 31L) AS i,
                 theta_in_bounds(theta_union(a, b), 60L) AS u,
-                theta_in_bounds(theta_anotb(a, b), 29L) AS d
+                theta_in_bounds(theta_difference(a, b), 29L) AS d
          FROM theta_ext""").head()
     assert(r.getBoolean(0) && r.getBoolean(1) && r.getBoolean(2))
   }
@@ -66,7 +64,7 @@ class ExtensionsSpec extends AnyFunSuite {
       """WITH per AS (SELECT g, theta_sketch_agg(k, 6) AS sk
            FROM agg_ext GROUP BY g)
          SELECT theta_in_bounds(
-             (SELECT theta_merge_agg(sk, 6) FROM per), 60L) AS ok""").head()
+             (SELECT theta_union_agg(sk, 6) FROM per), 60L) AS ok""").head()
     assert(r.getBoolean(0))
     // AMS F2: 60 singletons -> exact F2 = 60, estimate within the bound
     val f2 = spark.sql("SELECT ams_f2_agg(k) FROM agg_ext").head().getLong(0)
@@ -75,7 +73,25 @@ class ExtensionsSpec extends AnyFunSuite {
     val e = intercept[Exception](
       spark.sql("SELECT theta_sketch_agg(k, CAST(g AS INT)) FROM agg_ext")
         .head())
-    assert(e.getMessage.contains("literal"))
+    assert(e.getMessage.contains("THETA_LG_NOM_ENTRIES_MUST_BE_CONSTANT"), e.getMessage)
+  }
+
+  test("no graft SQL function shadows a Spark built-in") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    val shadowing = GraftExtensions.descriptions.map(_._1)
+      .filter(n => FunctionRegistry.builtin.functionExists(FunctionIdentifier(n)))
+    assert(shadowing.isEmpty, s"graft re-registers Spark built-ins: $shadowing")
+    // Spark's documented forms work in a graft session: the one-argument
+    // theta_sketch_agg (default lgNom) and the three-argument theta_union
+    val s = GraftSession.open(sfDir, "local[4]")
+    val r = s.sql(
+      """WITH sk AS (SELECT theta_sketch_agg(id) AS a,
+                             theta_sketch_agg(id + 50) AS b FROM range(100))
+         SELECT theta_sketch_estimate(a) AS n_a,
+                theta_sketch_estimate(theta_union(a, b, 8)) AS n_u
+         FROM sk""").head()
+    assert(r.getLong(0) == 100L && r.getLong(1) == 150L, r.toString)
   }
 
   test("SQL rolling_hash matches the Column-API expression over real data") {

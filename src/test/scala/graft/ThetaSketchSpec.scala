@@ -7,17 +7,20 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.ThetaSketchAgg.thetaSketchAgg
-import graft.functions.ThetaSetOp.{thetaANotB, thetaIntersect, thetaUnion}
 import graft.functions.ThetaInBounds.thetaInBounds
 
-/** [[graft.functions.ThetaSketchAgg]] + the scalar set-op expressions
-  * behind q215. Pins (1) exact-mode equality below nominal entries,
-  * (2) the determinism the driver's hash gate needs — identical sketch
-  * BYTES across partitionings (canonical k-smallest-hash cutback, a
-  * pure function of the input set), (3) estimation-mode bound coverage
-  * for |A|, |A∩B|, |A∪B|, |A∖B| on sets with known overlap, and
-  * (4) the empty-input / disjoint edge cases.
+/** Spark's built-in theta functions (`theta_sketch_agg`,
+  * `theta_union_agg`, `theta_intersection`, `theta_union`,
+  * `theta_difference`) as q215, q216 and q228 use them, plus graft's
+  * [[graft.functions.ThetaInBounds]] check. Pins (1) exact-mode
+  * equality below nominal entries, (2) the determinism the oracle's
+  * hash gate needs — identical sketch BYTES across partitionings
+  * (canonical k-smallest-hash cutback, a pure function of the input
+  * set), (3) estimation-mode bound coverage for |A|, |A∩B|, |A∪B|,
+  * |A∖B| on sets with known overlap, (4) the empty-input / disjoint
+  * edge cases, and (5) union-merge of per-group sketches == the direct
+  * sketch. A Spark upgrade that changes any of these shows up here
+  * before it shows up in the queries.
   */
 class ThetaSketchSpec extends AnyFunSuite {
 
@@ -35,7 +38,7 @@ class ThetaSketchSpec extends AnyFunSuite {
   private def sketchOf(keys: Seq[Long], lgNom: Int, parts: Int): Array[Byte] = {
     import spark.implicits._
     spark.sparkContext.parallelize(keys, parts).toDF("k")
-      .agg(thetaSketchAgg(col("k"), lgNom))
+      .agg(theta_sketch_agg(col("k"), lgNom))
       .head.getAs[Array[Byte]](0)
   }
 
@@ -63,16 +66,16 @@ class ThetaSketchSpec extends AnyFunSuite {
         (k, k < 4000L, k >= 3000L)).toDF("k", "in_a", "in_b")
       .repartition(7)
       .agg(
-        thetaSketchAgg(when(col("in_a"), col("k")), 5).as("sa"),
-        thetaSketchAgg(when(col("in_b"), col("k")), 5).as("sb"))
+        theta_sketch_agg(when(col("in_a"), col("k")), 5).as("sa"),
+        theta_sketch_agg(when(col("in_b"), col("k")), 5).as("sb"))
       .select(
         thetaInBounds(col("sa"), lit(4000L), 3).as("a_ok"),
         thetaInBounds(col("sb"), lit(5000L), 3).as("b_ok"),
-        thetaInBounds(thetaIntersect(col("sa"), col("sb")), lit(1000L), 3)
+        thetaInBounds(theta_intersection(col("sa"), col("sb")), lit(1000L), 3)
           .as("i_ok"),
-        thetaInBounds(thetaUnion(col("sa"), col("sb")), lit(8000L), 3)
+        thetaInBounds(theta_union(col("sa"), col("sb")), lit(8000L), 3)
           .as("u_ok"),
-        thetaInBounds(thetaANotB(col("sa"), col("sb")), lit(3000L), 3)
+        thetaInBounds(theta_difference(col("sa"), col("sb")), lit(3000L), 3)
           .as("d_ok"))
     val r = df.head
     assert((0 until 5).forall(r.getBoolean), r.toString)
@@ -82,31 +85,35 @@ class ThetaSketchSpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq((1L, true), (2L, true)).toDF("k", "in_a")
       .agg(
-        thetaSketchAgg(when(col("in_a"), col("k")), 5).as("sa"),
+        theta_sketch_agg(when(col("in_a"), col("k")), 5).as("sa"),
         // no row sets in_b: this side aggregates zero keys
-        thetaSketchAgg(when(!col("in_a"), col("k")), 5).as("sb"))
+        theta_sketch_agg(when(!col("in_a"), col("k")), 5).as("sb"))
       .select(
         thetaInBounds(col("sb"), lit(0L), 3).as("empty_ok"),
-        thetaInBounds(thetaIntersect(col("sa"), col("sb")), lit(0L), 3)
+        thetaInBounds(theta_intersection(col("sa"), col("sb")), lit(0L), 3)
           .as("disjoint_ok"),
-        thetaIntersect(col("sa"), col("sb")).as("inter"))
+        theta_intersection(col("sa"), col("sb")).as("inter"),
+        col("sb"))
     val r = df.head
+    // an empty group is a sketch, not a null, and its bounds are [0, 0]
+    assert(!r.isNullAt(3))
+    val empty = CompactSketch.heapify(Memory.wrap(r.getAs[Array[Byte]]("sb")))
+    assert(empty.getLowerBound(3) == 0.0 && empty.getUpperBound(3) == 0.0)
     assert(r.getBoolean(0) && r.getBoolean(1))
     assert(est(r.getAs[Array[Byte]]("inter")) == 0.0)
   }
 
   test("merge-agg of per-group sketches == direct sketch of the raw keys") {
-    import graft.functions.ThetaMergeAgg.thetaMergeAgg
     import spark.implicits._
     // 40 groups, overlapping key ranges, enough keys for estimation mode
     val rows = (0 until 40).flatMap(g =>
       (0 until 200).map(i => (g.toLong, (g * 150 + i * 7).toLong)))
     val df = rows.toDF("g", "k")
-    val direct = df.agg(thetaSketchAgg(col("k"), 6).as("s"))
+    val direct = df.agg(theta_sketch_agg(col("k"), 6).as("s"))
       .head.getAs[Array[Byte]]("s")
     val merged = df.groupBy(col("g"))
-      .agg(thetaSketchAgg(col("k"), 6).as("s"))
-      .agg(thetaMergeAgg(col("s"), 6).as("m"))
+      .agg(theta_sketch_agg(col("k"), 6).as("s"))
+      .agg(theta_union_agg(col("s"), 6).as("m"))
       .head.getAs[Array[Byte]]("m")
     // canonical cutback: the union of per-group sketches is bit-equal
     // to sketching the union's raw keys — the property that makes a
@@ -114,9 +121,9 @@ class ThetaSketchSpec extends AnyFunSuite {
     assert(java.util.Arrays.equals(direct, merged))
     // and across partitionings of the sketch rows
     val merged13 = df.groupBy(col("g"))
-      .agg(thetaSketchAgg(col("k"), 6).as("s"))
+      .agg(theta_sketch_agg(col("k"), 6).as("s"))
       .repartition(13)
-      .agg(thetaMergeAgg(col("s"), 6).as("m"))
+      .agg(theta_union_agg(col("s"), 6).as("m"))
       .head.getAs[Array[Byte]]("m")
     assert(java.util.Arrays.equals(direct, merged13))
   }
