@@ -464,7 +464,7 @@ object Dedup {
     graft.Memo.artifact(s, dir, "cc_labels")(
       connectedComponents(
         Tables.documents(s, dir).select(col("doc_id")),
-        simhashPairs(s, dir).select(col("doc_a"), col("doc_b"))))
+        simhashPairs(s, dir).select(col("doc_a"), col("doc_b")))._1)
 
   /** Connected-component labels (doc_id, cluster = component min id) for
     * every node — the engine's general CC operator (exercised directly
@@ -474,8 +474,10 @@ object Dedup {
     *
     * @param nodes single-column (doc_id) node set
     * @param pairList undirected edges as (doc_a, doc_b) rows
+    * @return the labels and the number of propagation rounds run
     */
-  private[graft] def connectedComponents(nodes: DataFrame, pairList: DataFrame): DataFrame = {
+  private[graft] def connectedComponents(nodes: DataFrame,
+      pairList: DataFrame): (DataFrame, Int) = {
     val pairs = pairList.cache()
     // edges pre-partitioned on the iteration join key so every round's
     // join reuses the same layout instead of re-shuffling the static side
@@ -495,25 +497,22 @@ object Dedup {
     // loop's invariants (monotone min-propagation from ids within the
     // component ⇒ same fixpoint = component min; the strictly
     // decreasing label sum still detects convergence).
-    // lazy (r16 optimization): round 1's convergence action materializes
-    // it — one fewer job barrier per cc call; the singleton anti-join
+    // lazy (r16 optimization): the initial label sum materializes it —
+    // one fewer job barrier per cc call; the singleton anti-join
     // still reads the pinned RDD, never the released caches
     val connected = edges.groupBy(col("src"))
       .agg(least(col("src"), min(col("dst"))).as("cluster"))
       .select(col("src").as("doc_id"), col("cluster"))
       .localCheckpoint(false)
-    var labels = connected
-      .localCheckpoint(false) // lazy: materialized by this round's sum action
     // coalesce: an edge-free corpus gives an EMPTY label table, where
     // sum() is null — the loop must converge on 0, not NPE
-    var prevSum = labels.agg(coalesce(sum(col("cluster")), lit(0L))).head.getLong(0)
-    var converged = false
-    var round = 0
+    def labelSum(l: DataFrame): Long =
+      l.agg(coalesce(sum(col("cluster")), lit(0L))).head().getLong(0)
     // pointer doubling reaches diameter ~2^rounds: 48 rounds covers any
-    // graph that fits in storage; if the cap is ever hit, FAIL loudly
-    // below rather than return non-minimal labels as if converged
-    val maxRounds = 48
-    while (!converged && round < maxRounds) {
+    // graph that fits in storage; if the bound is ever hit, FAIL loudly
+    // rather than return non-minimal labels as if converged
+    val ((labels, _), rounds) = graft.plans.Fixpoint("connectedComponents", 48)(
+        (connected, labelSum(connected))) { case ((labels, prevSum), _) =>
       val neighborMin = edges.join(labels, col("src") === col("doc_id"))
         .groupBy(col("dst")).agg(min(col("cluster")).as("nbr_min"))
       val stepped = labels
@@ -536,23 +535,16 @@ object Dedup {
         .select(col("a.doc_id").as("doc_id"),
           least(coalesce(col("b.cluster"), col("a.cluster")), col("a.cluster")).as("cluster"))
         .localCheckpoint(false) // cut lineage: O(1) plan per round
-      val nextSum = next.agg(coalesce(sum(col("cluster")), lit(0L))).head.getLong(0)
-      converged = nextSum == prevSum // min-propagation strictly decreases until fixpoint
-      prevSum = nextSum
-      labels = next
-      round += 1
+      val nextSum = labelSum(next)
+      // min-propagation strictly decreases the sum until the fixpoint
+      ((next, nextSum), nextSum == prevSum)
     }
-    require(converged,
-      s"connectedComponents did not converge within $maxRounds rounds — " +
-        "labels would be non-minimal; investigate the edge set")
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] converged in $round rounds")
     val singletons = nodes
       .join(connected, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("doc_id").as("cluster"))
     val out = labels.union(singletons)
     pairs.unpersist(); edges.unpersist()
-    out
+    (out, rounds)
   }
 
   /** q93 — DELTA near-dup detection: a batch of new arrivals (doc_id ≡ 0

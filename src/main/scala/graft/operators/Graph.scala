@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.GQuery
 import graft.GQuery.oracled
+import graft.plans.Fixpoint
 import graft.sources.Tables
 
 /** Iterative graph analytics over the co-rating affinity graph (the same
@@ -62,14 +63,22 @@ object Graph {
     * approximation. Cost after the cap: Σ min(group, cap)² ≤
     * #groups·cap² — linear in distinct (item, rating) keys, flat in
     * users-per-group. Surfaced via -Dgraft.coRating.groupCap /
-    * GRAFT_CO_RATING_GROUP_CAP (read once at class init so the Spark
-    * build and every oracle string stay in lockstep); the no-silent-caps
+    * GRAFT_CO_RATING_GROUP_CAP (see [[capSetting]]); the no-silent-caps
     * rule logs loudly whenever a group is actually truncated.
     */
   private[graft] val CoRatingGroupCap: Long =
-    sys.props.get("graft.coRating.groupCap")
-      .orElse(sys.env.get("GRAFT_CO_RATING_GROUP_CAP"))
-      .map(_.toLong).getOrElse(500L)
+    capSetting("graft.coRating.groupCap", "GRAFT_CO_RATING_GROUP_CAP", 500L)
+
+  /** Reads one of this file's caps from -D`prop`, else env `env`, else
+    * `default`. Each cap is read once at class init, so the Spark build
+    * and every oracle string stay in lockstep. A cap must be a positive
+    * integer: a cap of 0 would silently empty the graph it bounds.
+    */
+  private[graft] def capSetting(prop: String, env: String, default: Long): Long =
+    sys.props.get(prop).orElse(sys.env.get(env)).fold(default) { v =>
+      v.trim.toLongOption.filter(_ > 0).getOrElse(
+        sys.error(s"$prop / $env must be a positive integer, got '$v'"))
+    }
 
   /** Deterministic hash-ordered truncation of each (item_id, rating)
     * user list to `cap` rows — the [[CoRatingGroupCap]] mechanism,
@@ -235,8 +244,8 @@ object Graph {
     * co-rating graph, in fixed-point BIGINT so the iterative Spark loop
     * and DuckDB's unrolled CTE chain agree bit-for-bit. Spark side: per
     * iteration ONE join (edges ⋈ ranks, partial-agg sum of contributions
-    * on dst) + ONE left join back to the node set; per-round
-    * localCheckpoint, lineage O(1). The edge side is pre-partitioned on
+    * on dst) + ONE left join back to the node set; a fixed 4-join plan
+    * that one action materializes. The edge side is pre-partitioned on
     * the join key, so each round shuffles only the (node, rank) table —
     * at 100 TB that's the GraphX/Pregel layout: static edges stay put,
     * the small vertex state moves.
@@ -266,15 +275,22 @@ object Graph {
          FROM pr$Iterations ORDER BY user_id"""
     }) { (s, dir) =>
     val (edges, nodes) = coRatingGraph(s, dir)
-    pageRank(edges, nodes, Iterations)
+    pageRank(unweighted(edges), nodes, Iterations)
       .withColumnRenamed("node", "user_id")
       .withColumnRenamed("rnk", "pagerank")
       .orderBy(col("user_id"))
   }
 
-  /** Fixed-point PageRank over a directed edge list (src, dst) and node
-    * set (user_id). See the recurrence note above [[q152]]; exercised on
-    * known graphs by GraphSpec. Output: (node, rnk) unordered.
+  /** Fixed-point PageRank over a directed edge list (src, dst, w, sw):
+    * each row carries its transition weight `w` and its source's weight
+    * sum `sw`, so contrib(u→v) = (rank(u) * w) div sw. Unweighted walks
+    * pass w = 1 and sw = out-degree ([[unweighted]]) — bit-identical to
+    * rank div deg on non-negative BIGINTs. `nodes` carries the node set
+    * in column `node`; `scale` is the fixed-point unit ([[Scale]] for the
+    * graph queries, TextRank's own for q203). See the recurrence note
+    * above [[q152]]; exercised on known graphs by GraphSpec. Output:
+    * (node, rnk) unordered. The one recurrence behind q152, q170, q171
+    * and q203.
     *
     * `seeds` = None runs the global walk (uniform init, every node gets
     * the teleport term). `seeds` = Some(S) runs the PERSONALIZED walk
@@ -284,55 +300,49 @@ object Graph {
     * equi-join + one partial-agg sum) is identical. The base/init terms
     * become a per-node column instead of a literal; everything stays
     * exact BIGINT fixed-point.
+    *
+    * No round is pinned: the iteration count is fixed, so the plan is at
+    * most `iterations` joins deep and the caller's one action
+    * materializes it (see [[graft.plans.Fixpoint]] on lazy pins under
+    * AQE). The per-node (base, init) table is the one pin, re-read by
+    * every round.
     */
   private[graft] def pageRank(edges: DataFrame, nodes: DataFrame,
-      iterations: Int, seeds: Option[DataFrame] = None): DataFrame = {
-    // the out-degree rides on the edge row so each iteration is a single
-    // join against the rank table, not two; the memoized co-rating table
-    // arrives pre-enriched AND pre-partitioned (see coRatingGraph) —
-    // deriving it here (the synthetic-graph path) costs one extra join
-    val withDeg =
-      if (edges.columns.contains("deg")) edges
-      else edges
-        .join(edges.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src")
-        .localCheckpoint()
-    // per-node (base, init): a constant for the global walk, seed-
-    // conditional for the personalized one — one broadcast-able vertex
-    // table either way, checkpointed once and re-read by every round
+      iterations: Int, seeds: Option[DataFrame] = None, scale: Long = Scale,
+      node: String = "user_id"): DataFrame = {
+    val nd = nodes.select(col(node).as("node"))
     val nState = (seeds match {
       case None =>
-        val n = nodes.count()
-        nodes.select(col("user_id"),
-          lit(15L * Scale / (100L * n)).as("base"),
-          lit(Scale / n).as("init"))
+        val n = nd.count()
+        nd.select(col("node"),
+          lit(15L * scale / (100L * n)).as("base"),
+          lit(scale / n).as("init"))
       case Some(sd) =>
         val ns = sd.count()
-        nodes.join(sd.select(col("node").as("user_id"), lit(true).as("is_seed")),
-            Seq("user_id"), "left")
-          .select(col("user_id"),
-            when(col("is_seed"), lit(15L * Scale / (100L * ns)))
+        nd.join(sd.select(col("node"), lit(true).as("is_seed")),
+            Seq("node"), "left")
+          .select(col("node"),
+            when(col("is_seed"), lit(15L * scale / (100L * ns)))
               .otherwise(lit(0L)).as("base"),
-            when(col("is_seed"), lit(Scale / ns))
+            when(col("is_seed"), lit(scale / ns))
               .otherwise(lit(0L)).as("init"))
     }).localCheckpoint(false)
-    var pr = nState.select(col("user_id").as("node"), col("init").as("rnk"))
-    for (_ <- 1 to iterations) {
-      val inflow = withDeg.join(pr, col("src") === col("node"))
-        .select(col("dst"), expr("rnk div deg").as("contrib"))
-        .groupBy(col("dst")).agg(sum(col("contrib")).as("inflow"))
-      pr = nState
-        .join(inflow, nState("user_id") === inflow("dst"), "left")
-        .select(nState("user_id").as("node"),
-          (col("base") + expr("85 * coalesce(inflow, 0L) div 100")).as("rnk"))
-        // LAZY checkpoint: the iteration count is FIXED, so the plan is
-        // at most `iterations` joins deep and one final action can
-        // materialize the whole chain — no per-round job barrier (the
-        // unbounded loops — CC, BFS — need eager rounds because they
-        // read a scalar per round anyway; this one doesn't)
-        .localCheckpoint(false)
+    (1 to iterations).foldLeft(nState.select(col("node"), col("init").as("rnk"))) {
+      (pr, _) =>
+        val inflow = edges.join(pr, col("src") === col("node"))
+          .select(col("dst"), expr("(rnk * w) div sw").as("contrib"))
+          .groupBy(col("dst")).agg(sum(col("contrib")).as("inflow"))
+        nState.join(inflow, col("node") === col("dst"), "left")
+          .select(col("node"),
+            (col("base") + expr("85 * coalesce(inflow, 0L) div 100")).as("rnk"))
     }
-    pr
   }
+
+  /** The co-rating memo's edges as an unweighted walk: w = 1 and
+    * sw = out-degree, read off the row ([[coRatingGraph]] carries deg).
+    */
+  private def unweighted(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"), lit(1L).as("w"), col("deg").as("sw"))
 
   /** BFS hop cap: the recursive oracle must bound its path length (the
     * cyclic graph otherwise generates ever-longer (node, dist) rows
@@ -348,11 +358,13 @@ object Graph {
     * undirected co-rating graph. Spark side: textbook distributed
     * frontier expansion — per round, join the frontier to the edge
     * table, anti-join out already-labeled nodes, stop when the frontier
-    * empties (an O(1) count per round is the only driver traffic).
-    * Unreached nodes are absent from the output (same inner semantics in
-    * the oracle's reachability CTE). The DuckDB oracle grows (node,
-    * dist) reachability rows declaratively and takes MIN(dist) — two
-    * independent formulations of BFS.
+    * empties (an O(1) count per round is the only driver traffic). It
+    * is [[bfsLabeled]] with ONE label shared by every seed, so the
+    * (seed, node) visited set is the node set and each node keeps its
+    * first (minimum) hop. Unreached nodes are absent from the output
+    * (same inner semantics in the oracle's reachability CTE). The DuckDB
+    * oracle grows (node, dist) reachability rows declaratively and takes
+    * MIN(dist) — two independent formulations of BFS.
     */
   val q154 = oracled(
     "q154_bfs_shortest_path",
@@ -368,38 +380,11 @@ object Graph {
        SELECT node AS user_id, CAST(MIN(dist) AS BIGINT) AS hops
        FROM reach GROUP BY node ORDER BY user_id""") { (s, dir) =>
     val (edges, nodes) = coRatingGraph(s, dir)
-    val seeds = nodes.filter(col("user_id") % 10 === 1).select(col("user_id").as("node"))
-    bfs(edges, seeds)
-      .withColumnRenamed("node", "user_id")
+    val seeds = nodes.filter(col("user_id") % 10 === 1)
+      .select(lit(0L).as("seed"), col("user_id").as("node"))
+    bfsLabeled(edges, seeds)
+      .select(col("node").as("user_id"), col("hops"))
       .orderBy(col("user_id"))
-  }
-
-  /** Multi-source BFS hop distances over a directed edge list (src, dst)
-    * from a seed node set (node). Output: (node, hops) for every
-    * reachable node, unordered. Exercised on known graphs by GraphSpec.
-    */
-  private[graft] def bfs(edges: DataFrame, seeds: DataFrame): DataFrame = {
-    var labels = seeds.select(col("node"), lit(0L).as("hops")).localCheckpoint()
-    var frontier = labels.select(col("node"))
-    var hop = 0L
-    var done = frontier.isEmpty
-    while (!done) {
-      hop += 1
-      if (hop > MaxHops)
-        sys.error(s"bfs: frontier alive after $MaxHops hops — " +
-          "raise MaxHops in BOTH the loop and the q154 oracle CTE together")
-      val next = edges.join(frontier, col("src") === col("node"))
-        .select(col("dst").as("node")).distinct()
-        .join(labels, Seq("node"), "left_anti")
-        .select(col("node"), lit(hop).as("hops"))
-        .localCheckpoint()
-      done = next.isEmpty
-      if (!done) {
-        labels = labels.unionByName(next).localCheckpoint()
-        frontier = next.select(col("node"))
-      }
-    }
-    labels
   }
 
   /** q200 — sampled harmonic centrality: for every user, Σ over a fixed
@@ -442,7 +427,7 @@ object Graph {
        ORDER BY n.user_id""") { (s, dir) =>
     val (edges, nodes) = coRatingGraph(s, dir)
     val seeds = nodes.orderBy(col("user_id")).limit(8)
-      .select(col("user_id").as("seed"))
+      .select(col("user_id").as("seed"), col("user_id").as("node"))
     val labels = bfsLabeled(edges, seeds)
     val h = labels.filter(col("hops") > 0)
       .groupBy(col("node"))
@@ -455,47 +440,40 @@ object Graph {
       .orderBy(col("user_id"))
   }
 
-  /** Seed-labeled multi-source BFS: like [[bfs]] but distances are kept
-    * PER SEED — state rows are (seed, node, hops), the frontier expands
-    * per seed, and the anti-join dedups on the (seed, node) pair. Used
-    * by q200; exercised on known graphs by GraphSpec.
+  /** Seed-labeled multi-source BFS: distances are kept PER SEED LABEL —
+    * state rows are (seed, node, hops), the frontier expands per label,
+    * and the anti-join dedups on the (seed, node) pair. `seeds` holds
+    * (seed, node) start rows: q200 and q211 label each seed by its own
+    * id, q154 gives every seed one shared label (plain multi-source
+    * BFS). Exercised on known graphs by GraphSpec.
     *
     * Only the per-hop frontier is ever checkpointed (r8, VERDICT r7 #5):
     * the accumulated label set is a LAZY union of the already-
     * checkpointed hop frames, so the visited-set anti-join reads each
     * hop's blocks in place instead of rewriting the whole growing table
-    * every hop (the previous per-hop `labels.localCheckpoint()` was an
-    * O(hops²) state rewrite at scale).
+    * every hop (a per-hop `labels.localCheckpoint()` is an O(hops²)
+    * state rewrite at scale).
     *
     * `cap`: when set, the expansion STOPS (normally, no error) once
     * `cap` hops are labeled — the bounded-radius form q211's exact
-    * track needs (ball of radius H, not full reachability). None keeps
-    * q200's run-to-exhaustion semantics with the MaxHops guard.
+    * track needs (ball of radius H, not full reachability). None runs
+    * to exhaustion under the [[MaxHops]] guard.
     */
   private[graft] def bfsLabeled(edges: DataFrame, seeds: DataFrame,
-      cap: Option[Long] = None): DataFrame = {
-    var labels = seeds
-      .select(col("seed"), col("seed").as("node"), lit(0L).as("hops"))
+      cap: Option[Int] = None): DataFrame = {
+    val start = seeds.select(col("seed"), col("node"), lit(0L).as("hops"))
       .localCheckpoint()
-    var frontier = labels.select(col("seed"), col("node"))
-    var hop = 0L
-    var done = frontier.isEmpty || cap.contains(0L)
-    while (!done) {
-      hop += 1
-      if (cap.isEmpty && hop > MaxHops)
-        sys.error(s"bfsLabeled: frontier alive after $MaxHops hops — " +
-          "raise MaxHops in BOTH the loop and the q200 oracle CTE together")
-      val next = edges.join(frontier, col("src") === col("node"))
-        .select(col("seed"), col("dst").as("node")).distinct()
-        .join(labels, Seq("seed", "node"), "left_anti")
-        .select(col("seed"), col("node"), lit(hop).as("hops"))
-        .localCheckpoint()
-      done = next.isEmpty
-      if (!done) {
-        labels = labels.unionByName(next) // lazy: both sides checkpointed
-        frontier = next.select(col("seed"), col("node"))
-        if (cap.exists(hop >= _)) done = true
-      }
+    val ((labels, _), _) = Fixpoint("bfsLabeled (raise MaxHops in the loop " +
+        "and the q154/q200 oracle CTEs together)", cap.getOrElse(MaxHops),
+        bounded = cap.isDefined)((start, start.select(col("seed"), col("node")))) {
+      case ((labels, frontier), hop) =>
+        val next = edges.join(frontier, col("src") === col("node"))
+          .select(col("seed"), col("dst").as("node")).distinct()
+          .join(labels, Seq("seed", "node"), "left_anti")
+          .select(col("seed"), col("node"), lit(hop.toLong).as("hops"))
+          .localCheckpoint()
+        if (next.isEmpty) ((labels, frontier), true)
+        else ((labels.unionByName(next), next.select(col("seed"), col("node"))), false)
     }
     labels
   }
@@ -644,20 +622,8 @@ object Graph {
          FROM wpr$Iterations ORDER BY user_id"""
     }) { (s, dir) =>
     val (edges, nodes) = coRatingGraph(s, dir)
-    val n = nodes.count()
-    val base = 15L * Scale / (100L * n)
-    var pr = nodes.select(col("user_id").as("node"), lit(Scale / n).as("rnk"))
-    for (_ <- 1 to Iterations) {
-      val inflow = edges.join(pr, col("src") === col("node"))
-        .select(col("dst"), expr("(rnk * w) div sw").as("contrib"))
-        .groupBy(col("dst")).agg(sum(col("contrib")).as("inflow"))
-      pr = nodes
-        .join(inflow, nodes("user_id") === inflow("dst"), "left")
-        .select(nodes("user_id").as("node"),
-          (lit(base) + expr("85 * coalesce(inflow, 0L) div 100")).as("rnk"))
-        .localCheckpoint(false) // fixed depth: lazy, one final materialization
-    }
-    pr.select(col("node").as("user_id"), col("rnk").as("pagerank"))
+    pageRank(edges, nodes, Iterations)
+      .select(col("node").as("user_id"), col("rnk").as("pagerank"))
       .orderBy(col("user_id"))
   }
 
@@ -670,7 +636,7 @@ object Graph {
     * the base term lands (seed-conditional instead of uniform — see
     * [[pageRank]]), so the per-iteration plan is bit-identical: one
     * join against the pre-partitioned edge memo + one partial-agg sum,
-    * lazy per-round checkpoints, exact BIGINT throughout. Nodes the
+    * exact BIGINT throughout. Nodes the
     * walk never reaches report 0 — kept in the output (their absence
     * IS the signal; the oracle's LEFT JOIN keeps them identically).
     */
@@ -704,7 +670,7 @@ object Graph {
     val (edges, nodes) = coRatingGraph(s, dir)
     val seeds = nodes.filter(col("user_id") % 10 === 1)
       .select(col("user_id").as("node"))
-    pageRank(edges, nodes, Iterations, Some(seeds))
+    pageRank(unweighted(edges), nodes, Iterations, Some(seeds))
       .select(col("node").as("user_id"), col("rnk").as("ppr"))
       .orderBy(col("user_id"))
   }
@@ -761,32 +727,27 @@ object Graph {
          FROM ps$Iterations ORDER BY seed, user_id"""
     }) { (s, dir) =>
     val (edges, nodes) = coRatingGraph(s, dir)
-    perSeedPpr(edges, nodes.orderBy(col("user_id")).limit(8)
+    perSeedPpr(unweighted(edges), nodes.orderBy(col("user_id")).limit(8)
         .select(col("user_id").as("seed")), Iterations)
       .select(col("seed"), col("node").as("user_id"), col("rnk").as("ppr"))
       .orderBy(col("seed"), col("user_id"))
   }
 
-  /** Per-seed sparse restart walk over a directed edge list carrying
-    * `deg` (src out-degree) — see [[q313]] for the recurrence and the
+  /** Per-seed sparse restart walk over [[pageRank]]'s edge rows
+    * (src, dst, w, sw) — see [[q313]] for the recurrence and the
     * zero-prune argument. Output: (seed, node, rnk), only rnk > 0 rows.
     * Exercised on hand-checked graphs by GraphSpec.
     */
   private[graft] def perSeedPpr(edges: DataFrame, seeds: DataFrame,
       iterations: Int): DataFrame = {
-    val withDeg =
-      if (edges.columns.contains("deg")) edges
-      else edges
-        .join(edges.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src")
-        .localCheckpoint()
     val sd = seeds.localCheckpoint(false)
     val base = sd.select(col("seed"), col("seed").as("node"),
       lit(15L * Scale / 100L).as("v"))
     var st = sd.select(col("seed"), col("seed").as("node"),
       lit(Scale).as("rnk")).localCheckpoint(false)
     for (_ <- 1 to iterations) {
-      val fl = withDeg.join(st, col("src") === col("node"))
-        .select(col("seed"), col("dst"), expr("rnk div deg").as("c"))
+      val fl = edges.join(st, col("src") === col("node"))
+        .select(col("seed"), col("dst"), expr("(rnk * w) div sw").as("c"))
         .groupBy(col("seed"), col("dst"))
         .agg(expr("85 * sum(c) div 100").as("v"))
         .select(col("seed"), col("dst").as("node"), col("v"))
@@ -816,15 +777,11 @@ object Graph {
     * within-core degree. Exercised on known graphs by GraphSpec.
     */
   private[graft] def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    def liveEdges(alive: DataFrame): DataFrame = edges
-      .join(alive.select(col("node").as("src")), Seq("src"), "left_semi")
-      .join(alive.select(col("node").as("dst")), Seq("dst"), "left_semi")
-    // EAGER per-round checkpoints, unlike the PageRank loops: each round
-    // consumes `alive` TWICE (both endpoint semi-joins), so a lazy chain
-    // doubles the unmaterialized plan per round — 2^rounds subtrees by
-    // the end. Materializing the (tiny, shrink-only) vertex set per
-    // round keeps every plan two joins deep.
-    var alive = edges.select(col("src").as("node")).distinct()
+    // Per-round pins, unlike PageRank: each round consumes `alive` TWICE
+    // (both endpoint semi-joins), so an unpinned chain doubles the plan
+    // per round — 2^rounds subtrees by the end. Pinning the (tiny,
+    // shrink-only) vertex set per round keeps every plan two joins deep.
+    val start = edges.select(col("src").as("node")).distinct()
       .localCheckpoint()
     // `rounds` is a CAP, not a count: the alive set only shrinks, so two
     // consecutive rounds with the same cardinality mean the SAME set —
@@ -835,10 +792,9 @@ object Graph {
     // between paying for the cap and paying for the graph's actual
     // degeneracy depth. The unrolled oracle still runs all `rounds`
     // CTE steps; monotonicity guarantees the answers agree.
-    var prevCount = alive.count()
-    var converged = false
-    for (_ <- 1 to rounds if !converged) {
-      alive = liveEdges(alive)
+    val ((alive, _), _) = Fixpoint("kCore", rounds, bounded = true)(
+        (start, start.count())) { case ((alive, prevCount), _) =>
+      val next = induced(edges, alive)
         .groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("src").as("node"))
@@ -846,14 +802,18 @@ object Graph {
         // it — one fewer barrier per peel round; the next round's two
         // endpoint joins then read the pinned RDD
         .localCheckpoint(false)
-      val c = alive.count()
-      converged = c == prevCount
-      prevCount = c
+      val c = next.count()
+      ((next, c), c == prevCount)
     }
-    liveEdges(alive)
+    induced(edges, alive)
       .groupBy(col("src")).agg(count(lit(1)).as("core_deg"))
       .select(col("src").as("node"), col("core_deg"))
   }
+
+  /** The (src, dst) edges with both endpoints in `nodes` (node). */
+  private def induced(edges: DataFrame, nodes: DataFrame): DataFrame = edges
+    .join(nodes.select(col("node").as("src")), Seq("src"), "left_semi")
+    .join(nodes.select(col("node").as("dst")), Seq("dst"), "left_semi")
 
   /** q172 — k-core decomposition (k = $CoreK): iteratively peel nodes
     * with fewer than k alive co-rating neighbors until stable; report
@@ -923,8 +883,8 @@ object Graph {
     * side: per round ONE join against the pre-partitioned edge memo +
     * TWO partial-aggregated shuffles ((dst,label) count, then max_by
     * argmax on dst) + the left join back to nodes — vertex state moves,
-    * edges never do; lazy per-round checkpoints as in [[pageRank]]
-    * (each round reads the label state once, plan depth = rounds).
+    * edges never do; lazy per-round checkpoints (each round reads the
+    * label state once, plan depth = rounds).
     * Exact BIGINT throughout; the oracle unrolls the same rounds with
     * DuckDB's arg_max over the identical key encoding.
     */
@@ -1073,9 +1033,7 @@ object Graph {
     * Surfaced via -Dgraft.linkPred.hubCap / GRAFT_LINK_PRED_HUB_CAP.
     */
   private[graft] val LinkPredHubCap: Long =
-    sys.props.get("graft.linkPred.hubCap")
-      .orElse(sys.env.get("GRAFT_LINK_PRED_HUB_CAP"))
-      .map(_.toLong).getOrElse(1000L)
+    capSetting("graft.linkPred.hubCap", "GRAFT_LINK_PRED_HUB_CAP", 1000L)
 
   /** q180 — link prediction over the co-rating graph: for every
     * non-adjacent pair with at least one common (sub-hub-cap) neighbor,
@@ -1216,26 +1174,22 @@ object Graph {
     * directed graphs by GraphSpec. Output: (user_id, authority, hub).
     */
   private[graft] def hits(od: DataFrame, nodes: DataFrame, rounds: Int): DataFrame = {
+    // one sup-normalized half-step: scores flow along od from the
+    // `from` endpoint to the `to` endpoint
+    def half(score: DataFrame, from: String, to: String): DataFrame = {
+      val raw = od.join(score, col(from) === col("node"))
+        .groupBy(col(to)).agg(sum(col("v")).as("raw"))
+        .localCheckpoint(false)
+      raw.crossJoin(broadcast(raw.agg(max(col("raw")).as("mx"))))
+        .select(col(to).as("node"), expr(s"(raw * $HitsScale) div mx").as("v"))
+        .localCheckpoint(false)
+    }
     var h = nodes.select(col("user_id").as("node"), lit(HitsScale).as("v"))
       .localCheckpoint(false)
     var a: DataFrame = h.limit(0)
     for (_ <- 1 to rounds) {
-      val araw = od.join(h, col("src") === col("node"))
-        .groupBy(col("dst")).agg(sum(col("v")).as("raw"))
-        .localCheckpoint(false)
-      val amax = araw.agg(max(col("raw")).as("mx"))
-      a = araw.crossJoin(broadcast(amax))
-        .select(col("dst").as("node"),
-          expr(s"(raw * $HitsScale) div mx").as("v"))
-        .localCheckpoint(false)
-      val hraw = od.join(a, col("dst") === col("node"))
-        .groupBy(col("src")).agg(sum(col("v")).as("raw"))
-        .localCheckpoint(false)
-      val hmax = hraw.agg(max(col("raw")).as("mx"))
-      h = hraw.crossJoin(broadcast(hmax))
-        .select(col("src").as("node"),
-          expr(s"(raw * $HitsScale) div mx").as("v"))
-        .localCheckpoint(false)
+      a = half(h, "src", "dst")
+      h = half(a, "dst", "src")
     }
     nodes
       .join(a.select(col("node").as("an_"), col("v").as("authority")),
@@ -1269,10 +1223,8 @@ object Graph {
     * (the sf1 driver-oracle spot-sweep raises it to keep the exact
     * compare).
     */
-  private[graft] val HyperBallExactMaxNodes: Long =
-    sys.props.get("graft.hyperball.exactMaxNodes")
-      .orElse(sys.env.get("GRAFT_HYPERBALL_EXACT_MAX_NODES"))
-      .map(_.toLong).getOrElse(5000L)
+  private[graft] val HyperBallExactMaxNodes: Long = capSetting(
+    "graft.hyperball.exactMaxNodes", "GRAFT_HYPERBALL_EXACT_MAX_NODES", 5000L)
 
   /** q211 — HyperBall (Boldi–Vigna) ALL-NODES neighborhood/centrality
     * via Spark's native DataSketches HLL functions — the sketch upgrade
@@ -1372,7 +1324,8 @@ object Graph {
         .orderBy(col("metric"))
     } else {
     val labels = bfsLabeled(edges,
-      nodes.select(col("user_id").as("seed")), cap = Some(BallRadius.toLong))
+      nodes.select(col("user_id").as("seed"), col("user_id").as("node")),
+      cap = Some(BallRadius))
     val exact = labels.groupBy(col("seed"))
       .agg(count(lit(1)).as("ball2"), // includes self (dist 0), as B_0 does
         count(when(col("hops") > 0, 1)).as("pairs2"),
@@ -1396,48 +1349,44 @@ object Graph {
     }
   }
 
-  /** Weighted single-source shortest paths by frontier Bellman-Ford:
-    * per round, relax only the edges leaving nodes whose distance
-    * improved last round — `cand = frontier ⋈ edges`, map-side min per
-    * destination, then an improvement check against the label table.
-    * The edge table stays put in its checkpointed hashpartitioning(src)
-    * layout; only (node, dist) state moves — the same cost model as
-    * [[bfs]]/PageRank. Distances beyond `bound` are pruned as part of
-    * the query's semantics ("reachable within budget"), which also
-    * bounds the round count: every round the frontier's minimum
-    * distance grows by at least the minimum edge length, so the loop
-    * fails loudly after `maxRounds` rather than spinning.
-    * edges: (src, dst, len); seeds: (node). Output (node, dist),
-    * unordered. Exercised on known graphs by GraphSpec.
+  /** Frontier label-correcting relaxation behind [[sssp]] and
+    * [[temporalEarliestArrival]]: per round, relax only the edges leaving
+    * nodes whose label improved last round (`frontier ⋈ edges` under
+    * `admit`, map-side min of `cand` per destination), then keep the
+    * improvements. Only (node, dist) state moves; labels only decrease,
+    * so the fixpoint is the true minimum. `admit` and `cand` read the edge
+    * row and the frontier's (node, dist); `seeds` is one `node` column,
+    * label 0. Output (node, dist), unordered.
+    */
+  private def relax(name: String, edges: DataFrame, seeds: DataFrame,
+      maxRounds: Int, admit: Column, cand: Column): DataFrame = {
+    val start = seeds.select(col("node"), lit(0L).as("dist")).localCheckpoint()
+    val ((dist, _), _) = Fixpoint(name, maxRounds)((start, start)) {
+      case ((dist, frontier), _) =>
+        val improved = edges.join(frontier, col("src") === col("node") && admit)
+          .groupBy(col("dst")).agg(min(cand).as("d"))
+          .join(dist.select(col("node").as("dst"), col("dist").as("od")),
+            Seq("dst"), "left")
+          .filter(col("od").isNull || col("d") < col("od"))
+          .select(col("dst").as("node"), col("d").as("dist"))
+          .localCheckpoint()
+        if (improved.isEmpty) ((dist, frontier), true)
+        else ((dist.unionByName(improved).groupBy(col("node"))
+          .agg(min(col("dist")).as("dist")).localCheckpoint(), improved), false)
+    }
+    dist
+  }
+
+  /** Weighted shortest paths by frontier Bellman-Ford ([[relax]] with
+    * candidate dist + len). Distances at or beyond `bound` are pruned
+    * ("reachable within budget"), which also bounds the round count.
+    * edges: (src, dst, len); seeds: (node). Exercised by GraphSpec.
     */
   private[graft] def sssp(edges: DataFrame, seeds: DataFrame,
       bound: Long = SsspBound, maxRounds: Int = 80): DataFrame = {
-    var dist = seeds.select(col("node"), lit(0L).as("dist")).localCheckpoint()
-    var frontier = dist
-    var round = 0
-    var done = frontier.isEmpty
-    while (!done) {
-      round += 1
-      if (round > maxRounds)
-        sys.error(s"sssp: frontier alive after $maxRounds rounds — " +
-          "bound/len changed? keep loop and oracle bounds in lockstep")
-      val cand = edges.join(frontier, col("src") === col("node"))
-        .select(col("dst").as("node"), (col("dist") + col("len")).as("d"))
-        .groupBy(col("node")).agg(min(col("d")).as("d"))
-        .filter(col("d") < bound)
-      val improved = cand.join(dist.withColumnRenamed("dist", "od"),
-          Seq("node"), "left")
-        .filter(col("od").isNull || col("d") < col("od"))
-        .select(col("node"), col("d").as("dist"))
-        .localCheckpoint()
-      done = improved.isEmpty
-      if (!done) {
-        dist = dist.unionByName(improved).groupBy(col("node"))
-          .agg(min(col("dist")).as("dist")).localCheckpoint()
-        frontier = improved
-      }
-    }
-    dist
+    val d = col("dist") + col("len")
+    relax("sssp (bound/len changed? keep loop and oracle bounds in lockstep)",
+      edges, seeds, maxRounds, d < bound, d)
   }
 
   /** Shortest-path budget for q221: paths costing this much or more are
@@ -1516,7 +1465,9 @@ object Graph {
     *
     * Every color class loses its root's whole SCC per outer round, so
     * rounds are bounded by the longest chain of SCCs, not their count;
-    * the loop fails loudly at `maxRounds`. All three inner shapes are
+    * the loop fails loudly at `maxRounds`. Both inner loops converge
+    * within |V| + 1 rounds (a color or a backward walk crosses at most
+    * |V| − 1 edges), which guards them. All three inner shapes are
     * the repo's standard iteration cost model: edge table re-filtered
     * by semi-join, (node, state) frames moving through
     * localCheckpoints. Output: (node, scc = MIN member id, the
@@ -1524,57 +1475,46 @@ object Graph {
     */
   private[graft] def scc(edges: DataFrame, nodes: DataFrame,
       maxRounds: Int = 30): DataFrame = {
-    var remaining = nodes.select(col("node")).distinct().localCheckpoint()
-    var out = remaining.select(col("node"), col("node").as("root"))
-      .filter(lit(false)).localCheckpoint()
-    var round = 0
-    while (!remaining.isEmpty) {
-      round += 1
-      if (round > maxRounds)
-        sys.error(s"scc: nodes remain after $maxRounds rounds — " +
-          "pathological SCC chain? raise maxRounds")
-      val er = edges
-        .join(remaining.select(col("node").as("src")), Seq("src"),
-          "left_semi")
-        .join(remaining.select(col("node").as("dst")), Seq("dst"),
-          "left_semi")
-        .localCheckpoint()
+    val all = nodes.select(col("node")).distinct().localCheckpoint(false)
+    val inner = (all.count() + 1).min(Int.MaxValue.toLong).toInt
+    val none = all.select(col("node"), col("node").as("root")).limit(0)
+    val ((out, _), _) = Fixpoint("scc (pathological SCC chain?)", maxRounds)(
+        (none, all)) { case ((out, remaining), _) =>
+      val er = induced(edges, remaining).localCheckpoint()
       // 1. forward max-id propagation to fixpoint
-      var color = remaining.select(col("node"), col("node").as("c"))
-        .localCheckpoint()
-      var stable = false
-      while (!stable) {
-        val upd = er.join(color.select(col("node").as("src"),
-            col("c").as("cs")), Seq("src"))
-          .groupBy(col("dst").as("node")).agg(max(col("cs")).as("cin"))
-        val nc = color.join(upd, Seq("node"), "left")
-          .select(col("node"),
-            greatest(col("c"), coalesce(col("cin"), col("c"))).as("c"))
-          .localCheckpoint()
-        stable = nc.alias("n").join(color.alias("o"), Seq("node"))
-          .filter(col("n.c") =!= col("o.c")).isEmpty
-        color = nc
+      val (color, _) = Fixpoint("scc color", inner)(
+          remaining.select(col("node"), col("node").as("c")).localCheckpoint()) {
+        (color, _) =>
+          val upd = er.join(color.select(col("node").as("src"),
+              col("c").as("cs")), Seq("src"))
+            .groupBy(col("dst").as("node")).agg(max(col("cs")).as("cin"))
+          val nc = color.join(upd, Seq("node"), "left")
+            .select(col("node"),
+              greatest(col("c"), coalesce(col("cin"), col("c"))).as("c"))
+            .localCheckpoint()
+          (nc, nc.alias("n").join(color.alias("o"), Seq("node"))
+            .filter(col("n.c") =!= col("o.c")).isEmpty)
       }
       // 2. backward collect from roots within each color class
-      var sccF = color.filter(col("node") === col("c"))
+      val roots = color.filter(col("node") === col("c"))
         .select(col("node"), col("c").as("root")).localCheckpoint()
-      var frontier = sccF
-      while (!frontier.isEmpty) {
-        val next = er.join(frontier.select(col("node").as("dst"),
-            col("root")), Seq("dst"))
-          .select(col("src").as("node"), col("root")).distinct()
-          .join(color, Seq("node"))
-          .filter(col("c") === col("root"))
-          .select(col("node"), col("root"))
-          .join(sccF, Seq("node"), "left_anti")
-          .localCheckpoint()
-        frontier = next
-        if (!next.isEmpty) sccF = sccF.unionByName(next).localCheckpoint()
+      val ((sccF, _), _) = Fixpoint("scc collect", inner)((roots, roots)) {
+        case ((sccF, frontier), _) =>
+          val next = er.join(frontier.select(col("node").as("dst"),
+              col("root")), Seq("dst"))
+            .select(col("src").as("node"), col("root")).distinct()
+            .join(color, Seq("node"))
+            .filter(col("c") === col("root"))
+            .select(col("node"), col("root"))
+            .join(sccF, Seq("node"), "left_anti")
+            .localCheckpoint()
+          if (next.isEmpty) ((sccF, frontier), true)
+          else ((sccF.unionByName(next).localCheckpoint(), next), false)
       }
       // 3. retire the finished components
-      out = out.unionByName(sccF).localCheckpoint()
-      remaining = remaining.join(sccF, Seq("node"), "left_anti")
+      val rest = remaining.join(sccF, Seq("node"), "left_anti")
         .localCheckpoint()
+      ((out.unionByName(sccF).localCheckpoint(), rest), rest.isEmpty)
     }
     // canonical label: the component's MIN member id
     val lbl = out.groupBy(col("root")).agg(min(col("node")).as("scc"))
@@ -1653,12 +1593,16 @@ object Graph {
     * @param pairs undirected edges, ONE row per edge (either
     *              orientation; both directions are materialized inside)
     */
-  def cc(nodes: DataFrame, pairs: DataFrame): DataFrame =
-    Dedup.connectedComponents(
-        nodes.select(col(nodes.columns.head).as("doc_id")),
-        pairs.select(col(pairs.columns(0)).as("doc_a"),
-          col(pairs.columns(1)).as("doc_b")))
-      .select(col("doc_id").as("node"), col("cluster").as("component"))
+  def cc(nodes: DataFrame, pairs: DataFrame): DataFrame = ccRounds(nodes, pairs)._1
+
+  /** [[cc]] together with the number of propagation rounds it ran. */
+  private[graft] def ccRounds(nodes: DataFrame, pairs: DataFrame): (DataFrame, Int) = {
+    val (labels, rounds) = Dedup.connectedComponents(
+      nodes.select(col(nodes.columns.head).as("doc_id")),
+      pairs.select(col(pairs.columns(0)).as("doc_a"),
+        col(pairs.columns(1)).as("doc_b")))
+    (labels.select(col("doc_id").as("node"), col("cluster").as("component")), rounds)
+  }
 
   /** q246 — connected components of the co-rating graph through the
     * [[cc]] API: per user, the component label (min user id in the
@@ -1841,44 +1785,18 @@ object Graph {
     val seeds = ev.filter(col("item") % 10 === 0)
       .select(col("item").as("node")).distinct()
     temporalEarliestArrival(edges, seeds)
-      .select(col("node").as("item_id"), col("arr").as("arrival_us"))
+      .select(col("node").as("item_id"), col("dist").as("arrival_us"))
       .orderBy(col("item_id"))
   }
 
   /** q252's loop, factored for the hand-built-graph spec: earliest
     * time-respecting arrival per reachable node. `edges` has
     * (src, dst, t); `seeds` a single `node` column (arrival 0 — times
-    * must be ≥ 0). Frontier label-correcting with the temporal
-    * admission rule t ≥ arr(src).
+    * must be ≥ 0). [[relax]] with the temporal admission rule
+    * t ≥ arr(src) and candidate arrival t. Output (node, dist).
     */
-  private[graft] def temporalEarliestArrival(edges: DataFrame,
-      seeds: DataFrame, maxRounds: Int = 200): DataFrame = {
-    var arr = seeds.select(col("node"), lit(0L).as("arr")).localCheckpoint()
-    var frontier = arr
-    var round = 0
-    var done = frontier.isEmpty
-    while (!done) {
-      round += 1
-      if (round > maxRounds)
-        sys.error(s"temporal reachability: frontier alive after $maxRounds rounds")
-      val cand = edges.join(frontier, col("src") === col("node") &&
-          col("t") >= col("arr"))
-        .groupBy(col("dst")).agg(min(col("t")).as("cArr"))
-      val improved = cand
-        .join(arr.select(col("node").as("dst"), col("arr").as("oArr")),
-          Seq("dst"), "left")
-        .filter(col("oArr").isNull || col("cArr") < col("oArr"))
-        .select(col("dst").as("node"), col("cArr").as("arr"))
-        .localCheckpoint()
-      done = improved.isEmpty
-      if (!done) {
-        arr = arr.unionByName(improved).groupBy(col("node"))
-          .agg(min(col("arr")).as("arr")).localCheckpoint()
-        frontier = improved
-      }
-    }
-    arr
-  }
+  private[graft] def temporalEarliestArrival(edges: DataFrame, seeds: DataFrame): DataFrame =
+    relax("temporal reachability", edges, seeds, 200, col("t") >= col("dist"), col("t"))
 
   // ------------------------------------------------ Borůvka spanning forest
 
@@ -1917,49 +1835,45 @@ object Graph {
         struct((-col("cnt")).as("nc"), col("ua").as("ka"),
           col("ub").as("kb")).as("k"))
       .localCheckpoint() // scanned once per round; lineage stays O(1)
-    var lbl = nodes.select(col("node"), col("node").as("lbl"))
+    val lbl0 = nodes.select(col("node"), col("node").as("lbl"))
       .localCheckpoint(false) // lazy (r17): round 1's chosen action pins it
     // accumulated msf: a union of per-round CHECKPOINTED chosen frames,
     // so the lineage stays one shallow union node — no per-round msf
     // re-checkpoint (rounds are ≤ ⌈log₂ V⌉, the union stays small)
-    var msf = keyed.select(col("ua"), col("ub"), col("cnt")).limit(0)
-    var round = 0
-    var done = false
-    while (!done) {
-      round += 1
-      if (round > maxRounds)
-        sys.error(s"boruvkaMsf: components alive after $maxRounds rounds " +
-          "— halving invariant broken? (labels must contract every round)")
-      val el = keyed
-        .join(lbl.select(col("node").as("ua"), col("lbl").as("la")), Seq("ua"))
-        .join(lbl.select(col("node").as("ub"), col("lbl").as("lb")), Seq("ub"))
-        .filter(col("la") =!= col("lb"))
-      // each inter-component edge is a candidate for BOTH endpoints;
-      // empty chosen ⟺ no inter-component edge left, so ONE materialized
-      // frame serves the termination check, the msf append, and the
-      // contraction (the first draft checkpointed el separately — one
-      // extra job per round for nothing)
-      val cand = el.select(col("la").as("comp"), col("k"))
-        .unionByName(el.select(col("lb").as("comp"), col("k")))
-      val chosen = cand.groupBy(col("comp")).agg(min(col("k")).as("k"))
-        .select(col("k.ka").as("ua"), col("k.kb").as("ub"),
-          (-col("k.nc")).as("cnt"))
-        .distinct() // one edge may be both endpoints' argmax
-        .localCheckpoint()
-      done = chosen.isEmpty
-      if (!done) {
-        msf = msf.unionByName(chosen)
-        val ce = chosen
+    val msf0 = keyed.select(col("ua"), col("ub"), col("cnt")).limit(0)
+    val ((msf, _), _) = Fixpoint("boruvkaMsf (halving invariant broken? " +
+        "labels must contract every round)", maxRounds)((msf0, lbl0)) {
+      case ((msf, lbl), _) =>
+        val el = keyed
           .join(lbl.select(col("node").as("ua"), col("lbl").as("la")), Seq("ua"))
           .join(lbl.select(col("node").as("ub"), col("lbl").as("lb")), Seq("ub"))
-          .select(col("la"), col("lb"))
-        val l2 = cc(lbl.select(col("lbl")).distinct(), ce).toDF("lbl", "nl")
-        lbl = lbl.join(l2, Seq("lbl"))
-          .select(col("node"), col("nl").as("lbl"))
-          // lazy (r17): the next round's chosen action (or the final
-          // msf consumer) pins it — one fewer barrier per round
-          .localCheckpoint(false)
-      }
+          .filter(col("la") =!= col("lb"))
+        // each inter-component edge is a candidate for BOTH endpoints;
+        // empty chosen ⟺ no inter-component edge left, so ONE materialized
+        // frame serves the termination check, the msf append, and the
+        // contraction (the first draft checkpointed el separately — one
+        // extra job per round for nothing)
+        val cand = el.select(col("la").as("comp"), col("k"))
+          .unionByName(el.select(col("lb").as("comp"), col("k")))
+        val chosen = cand.groupBy(col("comp")).agg(min(col("k")).as("k"))
+          .select(col("k.ka").as("ua"), col("k.kb").as("ub"),
+            (-col("k.nc")).as("cnt"))
+          .distinct() // one edge may be both endpoints' argmax
+          .localCheckpoint()
+        if (chosen.isEmpty) ((msf, lbl), true)
+        else {
+          val ce = chosen
+            .join(lbl.select(col("node").as("ua"), col("lbl").as("la")), Seq("ua"))
+            .join(lbl.select(col("node").as("ub"), col("lbl").as("lb")), Seq("ub"))
+            .select(col("la"), col("lb"))
+          val l2 = cc(lbl.select(col("lbl")).distinct(), ce).toDF("lbl", "nl")
+          val next = lbl.join(l2, Seq("lbl"))
+            .select(col("node"), col("nl").as("lbl"))
+            // lazy (r17): the next round's chosen action (or the final
+            // msf consumer) pins it — one fewer barrier per round
+            .localCheckpoint(false)
+          ((msf.unionByName(chosen), next), false)
+        }
     }
     msf
   }
@@ -2044,9 +1958,7 @@ object Graph {
     * (≤753 < 1000) the count is the exact uncapped one.
     */
   private[graft] val ButterflyCap: Long =
-    sys.props.get("graft.butterfly.itemCap")
-      .orElse(sys.env.get("GRAFT_BUTTERFLY_ITEM_CAP"))
-      .map(_.toLong).getOrElse(1000L)
+    capSetting("graft.butterfly.itemCap", "GRAFT_BUTTERFLY_ITEM_CAP", 1000L)
 
   /** q285 — BUTTERFLY COUNTING in the bipartite user–item graph
     * (butterfly = 2×2 biclique, the bipartite analogue of the

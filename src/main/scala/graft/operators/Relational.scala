@@ -1181,8 +1181,8 @@ object Relational {
 
   /** q353 — JOIN-SKEW diagnosis ledger: per fact join-key family, the
     * numbers the salting decision is actually made on (the measured
-    * companion to q266/[[Skew.saltedJoin]] and this round's SkewBench
-    * A/B): rows, distinct keys, the hottest key's row count, its
+    * companion to q266/[[Skew.saltedJoin]] and the sf1/sf3 skew A/B
+    * recorded in BUILDLOG.md): rows, distinct keys, the hottest key's row count, its
     * corpus share (top1_ppm), and skew_x1000 = 1000·max/mean — AQE's
     * `skewedPartitionFactor` compares a partition to the median
     * partition, and this is the KEY-level analogue a pipeline can

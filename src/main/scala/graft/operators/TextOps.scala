@@ -1268,27 +1268,16 @@ object TextOps {
       .agg(count(lit(1)).as("w"))
       .filter(col("w") >= TrMinW)
     // vocabulary-sized graph from here down: one localCheckpoint'd edge
-    // table (the corpus work), then 4 lazy rank rounds over ≤ |V|² rows
+    // table (the corpus work) carrying each source's weight sum, then
+    // Graph.pageRank's 4 unpinned rounds over ≤ |V|² rows
     val d = und.select(col("a").as("src"), col("b").as("dst"), col("w"))
       .unionByName(und.select(col("b").as("src"), col("a").as("dst"), col("w")))
+      .withColumn("sw", sum(col("w"))
+        .over(org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
       .localCheckpoint()
-    val sw = d.groupBy(col("src")).agg(sum(col("w")).cast("long").as("sw"))
-    // lazy (r17): the count right below is the materializing action
-    // (count touches every partition, so the pinned blocks are complete)
-    val nodes = d.select(col("src").as("tok")).distinct().localCheckpoint(false)
-    val n = nodes.count()
-    var pr = nodes.select(col("tok"), lit(TrScale / n).as("rnk"))
-    (1 to TrIters).foreach { _ =>
-      val inflow = pr.join(d, col("tok") === col("src"))
-        .join(sw.withColumnRenamed("src", "sws"), col("sws") === col("src"))
-        .select(col("dst"), expr("(rnk * w) div sw").as("contrib"))
-        .groupBy(col("dst")).agg(sum(col("contrib")).as("inflow"))
-      pr = nodes.join(inflow, col("tok") === col("dst"), "left")
-        .select(col("tok"),
-          (lit(15L * TrScale / (100L * n))
-            + expr("(85 * COALESCE(inflow, 0)) div 100")).as("rnk"))
-    }
-    pr.select(col("tok"), col("rnk").cast("long").as("rank_fp"))
+    val pr = Graph.pageRank(d, d.select(col("src").as("tok")).distinct(),
+      TrIters, scale = TrScale, node = "tok")
+    pr.select(col("node").as("tok"), col("rnk").cast("long").as("rank_fp"))
       .orderBy(col("rank_fp").desc, col("tok"))
       .limit(10)
   }

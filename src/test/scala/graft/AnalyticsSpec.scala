@@ -89,7 +89,7 @@ class AnalyticsSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L).toDF("doc_id")
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L)).toDF("doc_a", "doc_b")
-    val got = operators.Dedup.connectedComponents(docs, pairs)
+    val got = operators.Dedup.connectedComponents(docs, pairs)._1
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 5L, 6L -> 5L, 7L -> 7L))
   }
@@ -98,7 +98,7 @@ class AnalyticsSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = Seq(10L, 11L).toDF("doc_id")
     val noPairs = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
-    val got = operators.Dedup.connectedComponents(docs, noPairs)
+    val got = operators.Dedup.connectedComponents(docs, noPairs)._1
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(10L -> 10L, 11L -> 11L))
   }

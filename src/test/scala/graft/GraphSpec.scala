@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,10 +21,17 @@ class GraphSpec extends AnyFunSuite {
 
   private val Scale = 1000000000000L
 
+  /** (src, dst) as the unweighted walk pageRank takes: w = 1 and
+    * sw = out-degree on every row.
+    */
+  private def walk(e: DataFrame): DataFrame =
+    e.select(col("src"), col("dst"), lit(1L).as("w"),
+      count(lit(1)).over(Window.partitionBy(col("src"))).as("sw"))
+
   private def ranks(edges: Seq[(Long, Long)], nodes: Seq[Long],
       iterations: Int): Map[Long, Long] = {
     import spark.implicits._
-    val e = edges.toDF("src", "dst")
+    val e = walk(edges.toDF("src", "dst"))
     val n = nodes.toDF("user_id")
     operators.Graph.pageRank(e, n, iterations)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -106,7 +114,7 @@ class GraphSpec extends AnyFunSuite {
       (1, 2), (1, 3), (2, 3), (3, 1), (4, 3), (5, 3), (6, 5), (7, 5), (3, 8))
     val nodes = (1L to 9L)
     val seeds = Set(1L, 4L)
-    val got = operators.Graph.pageRank(edges.toDF("src", "dst"),
+    val got = operators.Graph.pageRank(walk(edges.toDF("src", "dst")),
         nodes.toDF("user_id"), 4, Some(seeds.toSeq.toDF("node")))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == referencePpr(edges, nodes, seeds, 4))
@@ -123,7 +131,7 @@ class GraphSpec extends AnyFunSuite {
       (1, 2), (1, 3), (2, 3), (3, 1), (4, 3), (5, 3), (6, 5), (7, 5), (3, 8))
     val nodes = (1L to 9L)
     val seeds = Seq(1L, 4L, 9L) // 9 is isolated: its walk stays at home
-    val got = operators.Graph.perSeedPpr(edges.toDF("src", "dst"),
+    val got = operators.Graph.perSeedPpr(walk(edges.toDF("src", "dst")),
         seeds.toDF("seed"), 4)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     // each seed's column of the matrix must equal the SINGLE-seed serial
@@ -141,7 +149,7 @@ class GraphSpec extends AnyFunSuite {
 
   test("personalized pageRank with seeds = all nodes IS global pageRank") {
     import spark.implicits._
-    val edges = Seq[(Long, Long)]((1, 2), (2, 3), (3, 1), (1, 3)).toDF("src", "dst")
+    val edges = walk(Seq[(Long, Long)]((1, 2), (2, 3), (3, 1), (1, 3)).toDF("src", "dst"))
     val nodes = (1L to 4L)
     val global = operators.Graph.pageRank(edges, nodes.toDF("user_id"), 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -218,14 +226,22 @@ class GraphSpec extends AnyFunSuite {
       .filter(col("node") === 7L).head().getLong(1) == 7L)
   }
 
+  /** Multi-source BFS hop distances: [[operators.Graph.bfsLabeled]] with
+    * one label shared by every seed (q154's form). Output node -> hops.
+    */
+  private def bfs(edges: DataFrame, seeds: Seq[Long]): Map[Long, Long] = {
+    import spark.implicits._
+    operators.Graph.bfsLabeled(edges,
+        seeds.toDF("node").select(lit(0L).as("seed"), col("node")))
+      .collect().map(r => r.getLong(1) -> r.getLong(2)).toMap
+  }
+
   test("bfs: multi-source min-hop distances on a known graph") {
     import spark.implicits._
     // path 0-1-2-3-4 (undirected), branch 2-5, isolated 9; seeds {0, 4}
     val und = Seq[(Long, Long)]((0, 1), (1, 2), (2, 3), (3, 4), (2, 5))
     val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
-    val seeds = Seq(0L, 4L).toDF("node")
-    val got = operators.Graph.bfs(edges, seeds)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = bfs(edges, Seq(0L, 4L))
     assert(got == Map(0L -> 0L, 4L -> 0L, 1L -> 1L, 3L -> 1L, 2L -> 2L, 5L -> 3L))
     // isolated node 9 must be absent, not at some sentinel distance
     assert(!got.contains(9L))
@@ -236,7 +252,7 @@ class GraphSpec extends AnyFunSuite {
     // same graph as the bfs case: path 0-1-2-3-4, branch 2-5; seeds {0, 4}
     val und = Seq[(Long, Long)]((0, 1), (1, 2), (2, 3), (3, 4), (2, 5))
     val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
-    val seeds = Seq(0L, 4L).toDF("seed")
+    val seeds = Seq(0L, 4L).toDF("seed").select(col("seed"), col("seed").as("node"))
     val got = operators.Graph.bfsLabeled(edges, seeds)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     // per-seed distances differ where the min-hop bfs collapses them
@@ -244,16 +260,13 @@ class GraphSpec extends AnyFunSuite {
     assert(got((0L, 3L)) == 3L && got((4L, 3L)) == 1L)
     assert(got((0L, 4L)) == 4L && got((4L, 0L)) == 4L)
     val minOverSeeds = got.groupBy(_._1._2).map { case (n, m) => n -> m.values.min }
-    val plain = operators.Graph.bfs(edges, Seq(0L, 4L).toDF("node"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(minOverSeeds == plain)
+    assert(minOverSeeds == bfs(edges, Seq(0L, 4L)))
   }
 
   test("bfs: empty seed set returns an empty labeling") {
     import spark.implicits._
     val edges = Seq[(Long, Long)]((0, 1), (1, 0)).toDF("src", "dst")
-    val seeds = spark.emptyDataset[Long].toDF("node")
-    assert(operators.Graph.bfs(edges, seeds).isEmpty)
+    assert(bfs(edges, Nil).isEmpty)
   }
 
   test("the memoized edge table keeps its src hash layout through the checkpoint") {
@@ -474,11 +487,39 @@ class GraphSpec extends AnyFunSuite {
       val viaGraph = operators.Graph.cc(nodes.toDF("node"), pairs.toDF("a", "b"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val viaDedup = operators.Dedup.connectedComponents(
-          nodes.toDF("doc_id"), pairs.toDF("doc_a", "doc_b"))
+          nodes.toDF("doc_id"), pairs.toDF("doc_a", "doc_b"))._1
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(viaGraph == expect, s"trial $trial: Graph.cc != union-find")
       assert(viaGraph == viaDedup, s"trial $trial: adapter drifted from Dedup CC")
     }
+  }
+
+  test("Graph.cc pointer doubling: a 256-node path converges in O(log n) rounds") {
+    import spark.implicits._
+    // plain min-propagation needs ~n/2 rounds to carry node 0's label to
+    // the far end; pointer doubling halves the remaining distance per
+    // round. Pinned: ⌈log₂ 256⌉ + 3 — the doubling rounds plus the
+    // shared first round and the round that sees no change.
+    val n = 256
+    val (labels, rounds) = operators.Graph.ccRounds(
+      (0L until n).toDF("node"), (1L until n).map(i => (i - 1, i)).toDF("a", "b"))
+    assert(labels.collect().forall(_.getLong(1) == 0L))
+    assert(rounds <= 8 + 3, s"cc took $rounds rounds on a $n-node path")
+  }
+
+  test("graph caps: a zero, negative or non-numeric cap fails loudly") {
+    val prop = "graft.test.graphCap"
+    val read = () => operators.Graph.capSetting(prop, "GRAFT_TEST_GRAPH_CAP_UNSET", 500L)
+    try {
+      assert(read() == 500L)
+      sys.props(prop) = "42"
+      assert(read() == 42L)
+      for (bad <- Seq("0", "-3", "5k", "")) {
+        sys.props(prop) = bad
+        val e = intercept[RuntimeException](read())
+        assert(e.getMessage.contains(prop), e.getMessage)
+      }
+    } finally sys.props -= prop
   }
 
   test("capGroups: identity under the cap, deterministic hash-ordered sample over it") {
