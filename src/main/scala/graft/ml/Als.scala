@@ -23,9 +23,10 @@ import graft.functions.VecOps
   * their ratings, and the items of block b with theirs. Each block also
   * records which of its entities every block of the other side needs,
   * so a half-step ships exactly those factor rows (one shuffle) and the
-  * receiving block gathers them into a dense buffer in other-side-id
-  * order. The iterations are one lineage; a single action materializes
-  * it, with no per-iteration job and nothing collected to the driver.
+  * receiving block gathers them, one array per row, in other-side-id
+  * order ([[Solver]] says why the rows stay separate arrays). The
+  * iterations are one lineage; a single action materializes it, with no
+  * per-iteration job and nothing collected to the driver.
   *
   * Determinism. Initial factors are seeded per entity id, and an
   * entity's normal equation is accumulated over its ratings in
@@ -122,13 +123,13 @@ object Als {
       }.partitionBy(part)
       msgs.zipPartitions(sides(dst)) { (ms, bs) =>
         val blk = bs.next()
-        val y = new Array[Double](blk.nSrc * rank)
+        val y = Array.ofDim[Double](blk.nSrc, rank)
         ms.foreach { case (_, (a, f)) =>
           val at = blk.gather(a)
           var t = 0
           while (t < at.length) {
-            var q = 0; val o = at(t) * rank; val fo = t * rank
-            while (q < rank) { y(o + q) = f(fo + q); q += 1 }
+            var q = 0; val yt = y(at(t)); val fo = t * rank
+            while (q < rank) { yt(q) = f(fo + q); q += 1 }
             t += 1
           }
         }
@@ -199,7 +200,7 @@ object Als {
     out
   }
 
-  private def solveBlock(blk: Block, y: Array[Double], k: Int, regParam: Double): Array[Float] = {
+  private def solveBlock(blk: Block, y: Array[Array[Double]], k: Int, regParam: Double): Array[Float] = {
     val solver = new Solver(k)
     val xj = new Array[Double](k)
     val out = new Array[Float](blk.ids.length * k)
@@ -238,13 +239,13 @@ object Als {
       val gather: Array[Array[Int]], val send: Array[Array[Int]]) extends Serializable {
 
     /** Squared training error of the factors `x` against `y`. */
-    def sse(y: Array[Double], x: Array[Float], k: Int): Double = {
+    def sse(y: Array[Array[Double]], x: Array[Float], k: Int): Double = {
       var total = 0.0; var j = 0
       while (j < ids.length) {
         var p = ptr(j)
         while (p < ptr(j + 1)) {
-          var dot = 0.0; var q = 0; val o = src(p) * k
-          while (q < k) { dot += x(j * k + q) * y(o + q); q += 1 }
+          var dot = 0.0; var q = 0; val ys = y(src(p))
+          while (q < k) { dot += x(j * k + q) * ys(q); q += 1 }
           val e = ratings(p) - dot
           total += e * e
           p += 1
@@ -301,38 +302,48 @@ object Als {
   }
 
   /** The per-entity least-squares solve. For the ratings `p` in
-    * [from, until) it minimizes Σ (ratings(p) − x·y_src(p))² + λ·n·|x|²,
-    * n = until − from, where y_s is row s of the dense row-major buffer
-    * `y` (k columns): it accumulates the upper triangle of YᵀY four
-    * ratings at a time (the four rows are copied side by side, and each
-    * pass over the triangle loads and stores every element once for four
-    * rank-1 updates) together with Yᵀr, adds λ·n to the diagonal and
-    * solves by an in-place Cholesky factorization on full row-major
-    * storage. One instance per task; not thread-safe.
+    * [from, until) it minimizes Σ (ratings(p) − x·y(src(p)))² + λ·n·|x|²,
+    * n = until − from, where `y` holds one factor row of k doubles per
+    * array: it accumulates the upper triangle of YᵀY four ratings at a
+    * time (each pass over the triangle loads and stores every element
+    * once for four rank-1 updates) together with Yᵀr, adds λ·n to the
+    * diagonal and solves by an in-place Cholesky factorization.
+    *
+    * Layout. The factor rows, the normal matrix and its Cholesky factor
+    * are each one `Array[Double]` per row, so every inner loop is a
+    * daxpy over arrays that share its index, as in
+    * `ai(j) += c0 * w0(j) + … + c3 * w3(j)`. HotSpot's C2 vectorizes that
+    * shape. It does not vectorize the same loop over one flat buffer read
+    * at loop-invariant offsets (`a(row + j) += c0 * w(j) + c1 * w(k + j)
+    * + …`), because it cannot prove those accesses independent: the flat
+    * layout ran the rank-64 solve scalar, in about 2.5× the time on an
+    * AVX-512 Xeon core. Do not flatten these matrices. Vectorizing over
+    * j leaves each element's sum in the same order, and the JVM never
+    * fuses a multiply-add, so the factors are the same bits in either
+    * layout. One instance per task; not thread-safe.
     */
   private[ml] final class Solver(k: Int) {
-    private val a = new Array[Double](k * k)
+    private val a = Array.ofDim[Double](k, k)
     private val b = new Array[Double](k)
-    private val w = new Array[Double](4 * k)
 
-    def solve(y: Array[Double], src: Array[Int], ratings: Array[Float], from: Int, until: Int,
+    def solve(y: Array[Array[Double]], src: Array[Int], ratings: Array[Float], from: Int, until: Int,
         regParam: Double, x: Array[Double]): Unit = {
-      java.util.Arrays.fill(a, 0.0); java.util.Arrays.fill(b, 0.0)
-      val (k1, k2, k3) = (k, 2 * k, 3 * k)
+      var i = 0
+      while (i < k) { java.util.Arrays.fill(a(i), 0.0); i += 1 }
+      java.util.Arrays.fill(b, 0.0)
       var p = from
       while (p + 3 < until) {
-        System.arraycopy(y, src(p) * k, w, 0, k); System.arraycopy(y, src(p + 1) * k, w, k1, k)
-        System.arraycopy(y, src(p + 2) * k, w, k2, k); System.arraycopy(y, src(p + 3) * k, w, k3, k)
+        val w0 = y(src(p)); val w1 = y(src(p + 1)); val w2 = y(src(p + 2)); val w3 = y(src(p + 3))
         val r0 = ratings(p).toDouble; val r1 = ratings(p + 1).toDouble
         val r2 = ratings(p + 2).toDouble; val r3 = ratings(p + 3).toDouble
-        var i = 0
+        i = 0
         while (i < k) {
-          val c0 = w(i); val c1 = w(k1 + i); val c2 = w(k2 + i); val c3 = w(k3 + i)
+          val c0 = w0(i); val c1 = w1(i); val c2 = w2(i); val c3 = w3(i)
           b(i) += c0 * r0 + c1 * r1 + c2 * r2 + c3 * r3
-          val row = i * k
+          val ai = a(i)
           var j = i
           while (j < k) {
-            a(row + j) += c0 * w(j) + c1 * w(k1 + j) + c2 * w(k2 + j) + c3 * w(k3 + j)
+            ai(j) += c0 * w0(j) + c1 * w1(j) + c2 * w2(j) + c3 * w3(j)
             j += 1
           }
           i += 1
@@ -340,43 +351,44 @@ object Als {
         p += 4
       }
       while (p < until) {
-        val o = src(p) * k; val r = ratings(p).toDouble
-        var i = 0
+        val w = y(src(p)); val r = ratings(p).toDouble
+        i = 0
         while (i < k) {
-          val c = y(o + i)
+          val c = w(i)
           b(i) += c * r
-          val row = i * k
+          val ai = a(i)
           var j = i
-          while (j < k) { a(row + j) += c * y(o + j); j += 1 }
+          while (j < k) { ai(j) += c * w(j); j += 1 }
           i += 1
         }
         p += 1
       }
       val lambda = regParam * (until - from)
-      var i = 0
-      while (i < k) { a(i * k + i) += lambda; i += 1 }
+      i = 0
+      while (i < k) { a(i)(i) += lambda; i += 1 }
       cholesky()
       // Uᵀz = b, then Ux = z (z overwrites b)
       i = 0
       while (i < k) {
-        val row = i * k; val z = b(i) / a(row + i); b(i) = z
+        val ai = a(i); val z = b(i) / ai(i); b(i) = z
         var j = i + 1
-        while (j < k) { b(j) -= a(row + j) * z; j += 1 }
+        while (j < k) { b(j) -= ai(j) * z; j += 1 }
         i += 1
       }
       i = k - 1
       while (i >= 0) {
-        val row = i * k; var s = b(i)
+        val ai = a(i); var s = b(i)
         var j = i + 1
-        while (j < k) { s -= a(row + j) * x(j); j += 1 }
-        x(i) = s / a(row + i)
+        while (j < k) { s -= ai(j) * x(j); j += 1 }
+        x(i) = s / ai(i)
         i -= 1
       }
     }
 
     /** A = UᵀU on the upper triangle, U overwriting it: four rows of U at
       * a time, then one rank-4 update of the trailing triangle (a single
-      * load and store per element instead of four).
+      * load and store per element instead of four). Only the last block
+      * can hold fewer than four rows, and it has no trailing triangle.
       */
     private def cholesky(): Unit = {
       var lo = 0
@@ -384,42 +396,40 @@ object Als {
         val hi = math.min(lo + 4, k)
         var i = lo
         while (i < hi) {
-          val row = i * k
-          val d = a(row + i)
+          val ai = a(i)
+          val d = ai(i)
           if (!(d > 0)) throw new ArithmeticException(s"ALS normal equation is not positive definite (pivot $d)")
           val s = math.sqrt(d)
-          a(row + i) = s
+          ai(i) = s
           var j = i + 1
-          while (j < k) { a(row + j) /= s; j += 1 }
+          while (j < k) { ai(j) /= s; j += 1 }
           var p = i + 1
-          while (p < hi) { update(i, p); p += 1 }
+          while (p < hi) { update(ai, p); p += 1 }
           i += 1
         }
         if (hi - lo == 4) {
-          val (r0, r1, r2, r3) = (lo * k, lo * k + k, lo * k + 2 * k, lo * k + 3 * k)
+          val (a0, a1, a2, a3) = (a(lo), a(lo + 1), a(lo + 2), a(lo + 3))
           var p = hi
           while (p < k) {
-            val u0 = a(r0 + p); val u1 = a(r1 + p); val u2 = a(r2 + p); val u3 = a(r3 + p)
-            val rowp = p * k
+            val u0 = a0(p); val u1 = a1(p); val u2 = a2(p); val u3 = a3(p)
+            val ap = a(p)
             var q = p
             while (q < k) {
-              a(rowp + q) -= u0 * a(r0 + q) + u1 * a(r1 + q) + u2 * a(r2 + q) + u3 * a(r3 + q)
+              ap(q) -= u0 * a0(q) + u1 * a1(q) + u2 * a2(q) + u3 * a3(q)
               q += 1
             }
             p += 1
           }
-        } else {
-          for (t <- lo until hi; p <- hi until k) update(t, p)
         }
         lo = hi
       }
     }
 
-    /** Row p of the trailing triangle minus row p's share of U's row t. */
-    private def update(t: Int, p: Int): Unit = {
-      val rowt = t * k; val u = a(rowt + p); val rowp = p * k
+    /** Row p of the trailing triangle minus row p's share of U's row `at`. */
+    private def update(at: Array[Double], p: Int): Unit = {
+      val u = at(p); val ap = a(p)
       var q = p
-      while (q < k) { a(rowp + q) -= u * a(rowt + q); q += 1 }
+      while (q < k) { ap(q) -= u * at(q); q += 1 }
     }
   }
 }

@@ -101,9 +101,17 @@ object RecommenderPipeline {
       .select(col("user_id").as("user"), col("item_id").as("item"),
         col("rating").cast("float").as("rating"))
 
+  private val Usage = "usage: RecommenderPipeline <train.tsv> <test.tsv> <outDir>"
+
   /** CLI: runMain graft.ml.RecommenderPipeline <train.tsv> <test.tsv> <outDir> */
-  def main(args: Array[String]): Unit = {
-    val Array(trainPath, testPath, outPath) = args.take(3)
+  def main(args: Array[String]): Unit = args.toList match {
+    case trainPath :: testPath :: outPath :: _ => cli(trainPath, testPath, outPath)
+    case _ =>
+      System.err.println(Usage)
+      sys.exit(2)
+  }
+
+  private def cli(trainPath: String, testPath: String, outPath: String): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
     val spark = graft.GraftSession.builder(cpus.toInt)
