@@ -72,11 +72,8 @@ object Bench {
     // --- phase 1: session + table warmup ---
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     graft.sources.Tables.names.foreach { t =>
-      try {
-        // events goes through its loader's ts normalization
-        if (t == "events") graft.sources.Tables.events(spark, sfDir).count()
-        else graft.sources.Tables(spark, sfDir, t).count()
-      } catch { case _: Throwable => () }
+      try graft.sources.Tables.named(spark, sfDir, t).count()
+      catch { case _: Throwable => () }
     }
     // --- phase 2: memo warmup (untimed in "queries"; builds shared
     // artifacts). Per-memo wall-clock is REPORTED in "memos" so the

@@ -92,13 +92,7 @@ object GraftSession {
     */
   def attach(spark: SparkSession, sfDir: String): Unit = {
     GraftExtensions.register(spark)
-    Tables.names.foreach { t =>
-      val df = t match {
-        case "events" => Tables.events(spark, sfDir) // ts encoding normalization
-        case other    => Tables(spark, sfDir, other)
-      }
-      df.createOrReplaceTempView(t)
-    }
+    Tables.names.foreach(t => Tables.named(spark, sfDir, t).createOrReplaceTempView(t))
     ml.Recommender.ratings(spark, sfDir).createOrReplaceTempView("ratings")
   }
 }

@@ -21,13 +21,16 @@ object Verify {
         "artifacts are shared across runs. UNSET it for the 7-vs-32 " +
         "determinism proof (each side must build independently).")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val failed = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      .flatMap { case (name, fn) =>
+      // an earlier run's output must not stand in for a query that fails now
+      val out = Paths.get(outDir, name)
+      if (Files.exists(out)) org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
+      try { fn(spark, sfDir).coalesce(1).write.parquet(out.toString); None }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
       finally spark.catalog.clearCache() // queries cache() internals; don't accumulate
     }
@@ -47,6 +50,8 @@ object Verify {
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    System.err.println(s"[verify] ${failed.size} failed" +
+      (if (failed.isEmpty) "" else failed.mkString(": ", ", ", "")))
     spark.stop()
   }
 }

@@ -171,6 +171,21 @@ object Recommender {
           .cast("decimal(18,9)")).cast("double") / count(lit(1))).as("rmse"))
   }
 
+  /** The rank-8 factor score of q33 and q35, 1 + the factor dot product
+    * clamped once into [1, 5]; [[rank8ScoreSql]] is its DuckDB text.
+    */
+  private def rank8Score: Column = {
+    val terms = transform(sequence(lit(0), lit(Rank - 1)),
+      f => factor(col("user_id"), f, 31, 17) * factor(col("item_id"), f, 23, 29))
+    clamp(lit(1.0) + aggregate(terms, lit(0.0), (acc, t) => acc + t), 1.0, 5.0)
+  }
+
+  private val rank8ScoreSql =
+    s"""LEAST(GREATEST(1.0 + list_reduce(
+              list_transform(range(0, 8), f ->
+                ${factorSql("user_id", "f", 31, 17)} * ${factorSql("item_id", "f", 23, 29)}),
+              (a, b) -> a + b), 1.0), 5.0)"""
+
   /** q33 — factor scoring join (J2 + O4 idiomatic form): dot product of
     * rank-8 deterministic factor vectors, computed as a sequential
     * `aggregate()` fold (bit-identical to DuckDB's `list_reduce`),
@@ -181,19 +196,13 @@ object Recommender {
     "rank-8 factor dot-product scoring + clamp + exact-decimal MAE",
     s"""WITH scored AS (
           SELECT rating,
-            LEAST(GREATEST(1.0 + list_reduce(
-              list_transform(range(0, 8), f ->
-                ${factorSql("user_id", "f", 31, 17)} * ${factorSql("item_id", "f", 23, 29)}),
-              (a, b) -> a + b), 1.0), 5.0) AS pred
+            $rank8ScoreSql AS pred
           FROM $ratingsSql AS r)
         SELECT COUNT(*) AS n_predictions,
         CAST(SUM(CAST(ABS(rating - pred) AS DECIMAL(18,9))) AS DOUBLE) / COUNT(*) AS mae
         FROM scored""") { (s, dir) =>
-    val terms = transform(sequence(lit(0), lit(Rank - 1)),
-      f => factor(col("user_id"), f, 31, 17) * factor(col("item_id"), f, 23, 29))
-    val pred = clamp(lit(1.0) + aggregate(terms, lit(0.0), (acc, t) => acc + t), 1.0, 5.0)
     ratings(s, dir)
-      .select(col("rating"), pred.as("pred"))
+      .select(col("rating"), rank8Score.as("pred"))
       .agg(
         count(lit(1)).as("n_predictions"),
         (sum(abs(col("rating") - col("pred")).cast("decimal(18,9)")).cast("double")
@@ -238,10 +247,7 @@ object Recommender {
     "golden predictions sink line format (S4)",
     s"""WITH scored AS (
           SELECT user_id, item_id, rating,
-            CAST(LEAST(GREATEST(1.0 + list_reduce(
-              list_transform(range(0, 8), f ->
-                ${factorSql("user_id", "f", 31, 17)} * ${factorSql("item_id", "f", 23, 29)}),
-              (a, b) -> a + b), 1.0), 5.0) AS DECIMAL(8,4)) AS pred
+            CAST($rank8ScoreSql AS DECIMAL(8,4)) AS pred
           FROM $ratingsSql AS r)
         SELECT user_id, item_id,
           user_id || CHR(9) || item_id || CHR(9) || rating || CHR(9) || pred
@@ -249,10 +255,7 @@ object Recommender {
         FROM scored
         WHERE user_id < 10
         ORDER BY user_id, item_id, line""") { (s, dir) =>
-    val terms = transform(sequence(lit(0), lit(Rank - 1)),
-      f => factor(col("user_id"), f, 31, 17) * factor(col("item_id"), f, 23, 29))
-    val pred = clamp(lit(1.0) + aggregate(terms, lit(0.0), (acc, t) => acc + t), 1.0, 5.0)
-      .cast("decimal(8,4)")
+    val pred = rank8Score.cast("decimal(8,4)")
     ratings(s, dir)
       .filter(col("user_id") < 10)
       .select(col("user_id"), col("item_id"), col("rating"), pred.as("pred"))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.GQuery
-import graft.GQuery.{oracled, rowsOnly}
+import graft.GQuery.{oracled, rowsOnly, sqlOver, sqlSurface}
 import graft.sources.Tables
 
 /** Second-ring relational surface: pivot, correlated subqueries, ALL set
@@ -36,25 +36,19 @@ object Advanced {
   }
 
   /** q61 — correlated scalar subquery: customers richer than their
-    * nation's average balance. Run through spark.sql so Catalyst's
-    * subquery decorrelation (RewriteCorrelatedScalarSubquery) is the
-    * machinery under test; the oracle is the same ANSI SQL.
+    * nation's average balance. The oracle text itself runs through
+    * spark.sql, so Catalyst's subquery decorrelation
+    * (RewriteCorrelatedScalarSubquery) is the machinery under test.
     */
-  val q61 = oracled(
+  val q61 = sqlSurface(
     "q61_correlated_subquery",
     "correlated scalar subquery (decorrelated to an agg+join by Catalyst)",
     """SELECT c_custkey, c_nationkey, c_acctbal
        FROM customer c1
        WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM customer c2
                           WHERE c2.c_nationkey = c1.c_nationkey)
-       ORDER BY c_custkey""") { (s, dir) =>
-    Tables.customer(s, dir).createOrReplaceTempView("customer_q61")
-    s.sql("""SELECT c_custkey, c_nationkey, c_acctbal
-             FROM customer_q61 c1
-             WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM customer_q61 c2
-                                WHERE c2.c_nationkey = c1.c_nationkey)
-             ORDER BY c_custkey""")
-  }
+       ORDER BY c_custkey""",
+    "customer")
 
   /** q62 — multiset (ALL) set operations: bag semantics preserve
     * duplicate cardinality, unlike q16/q17's set semantics.
@@ -610,7 +604,7 @@ object Advanced {
     * with a window, here exercised through the planner's lateral-join
     * machinery instead).
     */
-  val q118 = oracled(
+  val q118 = sqlSurface(
     "q118_lateral_topk",
     "LATERAL per-nation top-2 customers (planner's lateral join under test)",
     """SELECT n_name, c_custkey, c_acctbal
@@ -618,16 +612,8 @@ object Advanced {
          SELECT c_custkey, c_acctbal FROM customer
          WHERE c_nationkey = n_nationkey
          ORDER BY c_acctbal DESC, c_custkey LIMIT 2) t
-       ORDER BY n_name, c_acctbal DESC, c_custkey""") { (s, dir) =>
-    Tables.nation(s, dir).createOrReplaceTempView("nation_q118")
-    Tables.customer(s, dir).createOrReplaceTempView("customer_q118")
-    s.sql("""SELECT n_name, c_custkey, c_acctbal
-             FROM nation_q118, LATERAL (
-               SELECT c_custkey, c_acctbal FROM customer_q118
-               WHERE c_nationkey = n_nationkey
-               ORDER BY c_acctbal DESC, c_custkey LIMIT 2) t
-             ORDER BY n_name, c_acctbal DESC, c_custkey""")
-  }
+       ORDER BY n_name, c_acctbal DESC, c_custkey""",
+    "nation", "customer")
 
   /** q119 — recursive CTE (Spark 4's WITH RECURSIVE): walk the
     * deterministic doc_id DIV 3 parent hierarchy from the root and
@@ -636,11 +622,10 @@ object Advanced {
     * executed by the engine's recursion operator rather than a
     * hand-rolled driver loop. Identical integer arithmetic recursion in
     * DuckDB; depth is bounded by log₃(corpus), so the recursion
-    * terminates at any scale.
+    * terminates at any scale. Spark runs the oracle's text with DuckDB's
+    * integer division `//` spelled `DIV`.
     */
-  val q119 = oracled(
-    "q119_recursive_hierarchy",
-    "WITH RECURSIVE parent-chain walk (doc_id DIV 3), per-depth fan-out",
+  private val q119Sql =
     """WITH RECURSIVE d(doc_id, depth) AS (
          SELECT CAST(0 AS BIGINT) AS doc_id, 0 AS depth
          UNION ALL
@@ -650,18 +635,12 @@ object Advanced {
        SELECT depth, CAST(COUNT(*) AS BIGINT) AS n_docs,
          CAST(MIN(doc_id) AS BIGINT) AS min_doc,
          CAST(MAX(doc_id) AS BIGINT) AS max_doc
-       FROM d GROUP BY depth ORDER BY depth""") { (s, dir) =>
-    Tables.documents(s, dir).select(col("doc_id")).createOrReplaceTempView("docs_q119")
-    s.sql("""WITH RECURSIVE d(doc_id, depth) AS (
-               SELECT CAST(0 AS BIGINT) AS doc_id, 0 AS depth
-               UNION ALL
-               SELECT c.doc_id, d.depth + 1
-               FROM docs_q119 c JOIN d ON c.doc_id DIV 3 = d.doc_id
-               WHERE c.doc_id <> 0)
-             SELECT depth, CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(MIN(doc_id) AS BIGINT) AS min_doc,
-               CAST(MAX(doc_id) AS BIGINT) AS max_doc
-             FROM d GROUP BY depth ORDER BY depth""")
+       FROM d GROUP BY depth ORDER BY depth"""
+  val q119 = oracled(
+    "q119_recursive_hierarchy",
+    "WITH RECURSIVE parent-chain walk (doc_id DIV 3), per-depth fan-out",
+    q119Sql) { (s, dir) =>
+    sqlOver(s, dir, "documents")(q119Sql.replace(" // ", " DIV "))
   }
 
   /** q291 — hierarchical SUBTREE ROLLUP (BOM explosion / org-chart

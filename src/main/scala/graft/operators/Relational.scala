@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.GQuery
-import graft.GQuery.oracled
+import graft.GQuery.{oracled, sqlSurface}
 import graft.sources.Tables
 import graft.functions.GraftFunctions._
 
@@ -435,19 +435,31 @@ object Relational {
       .orderBy(col("o_year"))
   }
 
-  /** Correlated-subquery text shared verbatim by both engines: TPC-H
-    * Q17's shape (small-quantity outliers vs the PER-PART average) with
-    * the float-policy risk removed — the threshold compare is all
-    * integer (`5·qty·count < Σqty`, quantities are integral in the
-    * fixture and the oracle casts through BIGINT), revenue crosses the
-    * gate as an exact BIGINT cents sum (r9: the DECIMAL(38,2) render
-    * was green in r8 but the probe bisection made no-decimal-output
-    * absolute), and there is no division anywhere. Spark sums BIGINT
-    * to BIGINT while DuckDB widens to HUGEINT — the outer CAST
-    * normalizes both; the per-row cents value is integer-valued scale-2
-    * decimal × 100, exact in both engines.
+  /** q202 — correlated scalar subqueries through the SQL surface: the
+    * one relational capability the registry exercised only in its
+    * decorrelated form. The SAME text runs on both engines; Spark's
+    * analyzer must DECORRELATE the two per-part scalar subqueries into
+    * aggregate-plus-join form (RewriteCorrelatedScalarSubquery) or the
+    * plan degenerates to a per-row nested-loop re-scan of lineitem —
+    * the difference between O(N) and O(N²) at 100 TB. PlanContractSpec
+    * pins the decorrelation (no nested-loop/cartesian join, exactly one
+    * extra aggregate over the fact side). The views live on a cloned
+    * session ([[GQuery.sqlOver]]), so the query composes with the
+    * registry's (session, dir) contract.
+    *
+    * The text is TPC-H Q17's shape (small-quantity outliers vs the
+    * PER-PART average) with the float-policy risk removed: the threshold
+    * compare is all integer (`5·qty·count < Σqty`, quantities are
+    * integral in the fixture and the oracle casts through BIGINT),
+    * revenue crosses the gate as an exact BIGINT cents sum, and there is
+    * no division anywhere. Spark sums BIGINT to BIGINT while DuckDB
+    * widens to HUGEINT — the outer CAST normalizes both; the per-row
+    * cents value is integer-valued scale-2 decimal × 100, exact in both
+    * engines.
     */
-  private val q202OracleSql =
+  val q202 = sqlSurface(
+    "q202_correlated_subquery",
+    "TPC-H Q17-shaped correlated scalar subqueries, decorrelated by the analyzer (all-integer threshold)",
     """SELECT p_brand,
          CAST(COUNT(*) AS BIGINT) AS n_small,
          CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT))
@@ -458,31 +470,8 @@ object Relational {
                                WHERE l2.l_partkey = p_partkey)
              < (SELECT SUM(CAST(l2.l_quantity AS BIGINT)) FROM lineitem l2
                 WHERE l2.l_partkey = p_partkey)
-       GROUP BY p_brand ORDER BY p_brand"""
-
-  /** q202 — correlated scalar subqueries through the SQL surface: the
-    * one relational capability the registry exercised only in its
-    * decorrelated form. The SAME text runs on both engines; Spark's
-    * analyzer must DECORRELATE the two per-part scalar subqueries into
-    * aggregate-plus-join form (RewriteCorrelatedScalarSubquery) or the
-    * plan degenerates to a per-row nested-loop re-scan of lineitem —
-    * the difference between O(N) and O(N²) at 100 TB. PlanContractSpec
-    * pins the decorrelation (no nested-loop/cartesian join, exactly one
-    * extra aggregate over the fact side). The views live on a CLONED
-    * session (the q206/q207/q208 isolation pattern — ADVICE r8: views on
-    * the shared session would persist past the call and could rebind any
-    * later `s.sql` text to this invocation's dir), so the query composes
-    * with the registry's (session, dir) contract.
-    */
-  val q202 = oracled(
-    "q202_correlated_subquery",
-    "TPC-H Q17-shaped correlated scalar subqueries, decorrelated by the analyzer (all-integer threshold)",
-    q202OracleSql) { (s, dir) =>
-    val sp = s.newSession()
-    Tables.lineitem(sp, dir).createOrReplaceTempView("lineitem")
-    Tables.part(sp, dir).createOrReplaceTempView("part")
-    sp.sql(q202OracleSql)
-  }
+       GROUP BY p_brand ORDER BY p_brand""",
+    "lineitem", "part")
 
   /** q207 — runtime bloom-filter join pruning: when a selective
     * predicate sits on one side of a SHUFFLE join, Spark's

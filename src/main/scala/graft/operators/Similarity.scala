@@ -96,21 +96,40 @@ object Similarity {
        FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
        WHERE ${duckCos("x", "y")} >= 0.45
        ORDER BY vec_a, vec_b""") { (s, dir) =>
-    val b = withNorm(Tables.embeddings(s, dir))
-      .withColumn("bucket", bucketCol)
-    b.alias("x").join(b.alias("y"),
-        col("x.bucket") === col("y.bucket")
-          && col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"),
-        (dotF(col("x.embedding"), col("y.embedding"))
-          / (col("x.nrm") * col("y.nrm"))).as("cos_sim"))
-      .filter(col("cos_sim") >= 0.45)
+    groupPairs(withNorm(Tables.embeddings(s, dir))
+        .withColumn("bucket", bucketCol), "bucket", 0.45)
+      .select(col("a").as("vec_a"), col("b").as("vec_b"),
+        col("cos").as("cos_sim"))
       .orderBy(col("vec_a"), col("vec_b"))
   }
 
   /** Embeddings with the L2 norm precomputed once per vector. */
   private[operators] def withNorm(e: org.apache.spark.sql.DataFrame) =
     e.select(col("vec_id"), col("embedding"), l2Norm(col("embedding")).as("nrm"))
+
+  /** Near-dup pairs within one group: every (a, b), a < b, of vectors
+    * that share `group` and whose cosine reaches `tau`, as (a, b, group,
+    * cos). `e` carries [[withNorm]]'s columns plus `group`; the pair side
+    * is one codegen'd dot + divide. The pair join of q321, q150, q318
+    * and q354.
+    */
+  private[operators] def groupPairs(e: DataFrame, group: String,
+      tau: Double): DataFrame =
+    e.alias("x").join(e.alias("y"),
+        col(s"x.$group") === col(s"y.$group")
+          && col("x.vec_id") < col("y.vec_id"))
+      .select(col("x.vec_id").as("a"), col("y.vec_id").as("b"),
+        col(s"x.$group").as(group),
+        (dotF(col("x.embedding"), col("y.embedding"))
+          / (col("x.nrm") * col("y.nrm"))).as("cos"))
+      .filter(col("cos") >= tau)
+
+  /** SemDeDup's drop rule (q150, q318): the distinct ids of every vector
+    * that has a lower-id near-dup in its group.
+    */
+  private[operators] def droppedIds(e: DataFrame, group: String,
+      tau: Double): DataFrame =
+    groupPairs(e, group, tau).select(col("b").as("vec_id")).distinct()
 
   /** Score x-aliased queries against y-aliased candidates under an extra
     * join predicate: one codegen'd dot per pair, norms from the inputs.
@@ -389,17 +408,9 @@ object Similarity {
        FROM a LEFT JOIN d ON a.vec_id = d.vec_id
        ORDER BY a.vec_id""") { (s, dir) =>
     val assigned = clusteredEmbeddings(s, dir)
-    val x = assigned.alias("x")
-    val y = assigned.alias("y")
-    val droppedIds = x.join(y,
-        col("x.cluster") === col("y.cluster")
-          && col("x.vec_id") < col("y.vec_id"))
-      .filter((dotF(col("x.embedding"), col("y.embedding"))
-        / (col("x.nrm") * col("y.nrm"))) >= 0.40)
-      .select(col("y.vec_id").as("vec_id")).distinct()
-      .withColumn("dropped", lit(true))
     assigned.select(col("vec_id"), col("cluster"))
-      .join(droppedIds, Seq("vec_id"), "left")
+      .join(droppedIds(assigned, "cluster", 0.40)
+        .withColumn("dropped", lit(true)), Seq("vec_id"), "left")
       .select(col("vec_id"), col("cluster"),
         coalesce(col("dropped"), lit(false)).as("dropped"))
       .orderBy(col("vec_id"))
@@ -1198,13 +1209,7 @@ object Similarity {
     val b = withNorm(Tables.embeddings(s, dir))
       .withColumn("bucket", bucketCol)
       .localCheckpoint() // pair join (both sides) + the ledger spine
-    val dropped = b.alias("x").join(b.alias("y"),
-        col("x.bucket") === col("y.bucket")
-          && col("x.vec_id") < col("y.vec_id"))
-      .filter((dotF(col("x.embedding"), col("y.embedding"))
-        / (col("x.nrm") * col("y.nrm"))) >= 0.45)
-      .select(col("y.vec_id").as("vec_id"))
-      .distinct()
+    val dropped = droppedIds(b, "bucket", 0.45)
       .withColumn("is_dropped", lit(1L))
     b.join(dropped, Seq("vec_id"), "left")
       .groupBy(col("bucket"))
@@ -1885,15 +1890,9 @@ object Similarity {
       .select(col("vec_id"), col("bucket"),
         (dotF(col("embedding"), col("mud")) / (col("nrm") * col("munrm")))
           .as("keep"))
-    val pr = e.alias("x").join(e.alias("y"),
-        col("x.bucket") === col("y.bucket") && col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("a"), col("y.vec_id").as("b2"),
-        col("x.bucket").as("bucket"),
-        (dotF(col("x.embedding"), col("y.embedding"))
-          / (col("x.nrm") * col("y.nrm"))).as("cs"))
-      .filter(col("cs") >= 0.45)
-    val dup = pr.select(col("a").as("vec_id"), col("b2").as("partner"))
-      .unionAll(pr.select(col("b2").as("vec_id"), col("a").as("partner")))
+    val pr = groupPairs(e, "bucket", 0.45)
+    val dup = pr.select(col("a").as("vec_id"), col("b").as("partner"))
+      .unionAll(pr.select(col("b").as("vec_id"), col("a").as("partner")))
     val rem = dup
       .join(kp.select(col("vec_id"), col("bucket").as("bucket_d"),
         col("keep").as("keep_d")), Seq("vec_id"))

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.GQuery
-import graft.GQuery.oracled
+import graft.GQuery.{oracled, sqlSurface}
 import graft.sources.Tables
 import graft.functions.GraftFunctions.dec2
 
@@ -163,11 +163,8 @@ object Temporal {
   /** q115 — SCD type-2 interval construction: turn a change stream into
     * versioned validity intervals (valid_from/valid_to, latest open as
     * '(current)') per key — the dimension-history build every warehouse
-    * runs. Change detection is a null-safe lag compare, version ids a
-    * running sum of change flags, interval close a lead over version
-    * starts: three window passes over ONE (user) partitioning, no
-    * self-join. Event-time ties break on event_id at the engines'
-    * shared microsecond precision.
+    * runs, by [[scd2Intervals]]. Event-time ties break on event_id at the
+    * engines' shared microsecond precision.
     */
   val q115 = oracled(
     "q115_scd2_intervals",
@@ -188,22 +185,37 @@ object Temporal {
            '%Y-%m-%d %H:%M:%S'), '(current)') AS valid_to,
          CAST(n_events AS BIGINT) AS n_events
        FROM iv ORDER BY user_id, version""") { (s, dir) =>
-    val wOrd = Window.partitionBy(col("user_id")).orderBy(col("t"), col("event_id"))
     val e = Tables.events(s, dir).filter(col("user_id") < 10)
       .select(col("user_id"), col("event_id"), col("event_type"), col("ts").as("t"))
-    val v = e
-      .withColumn("chg",
-        when(!(lag(col("event_type"), 1).over(wOrd) <=> col("event_type")), 1).otherwise(0))
-      .withColumn("version", sum(col("chg")).over(wOrd.rowsBetween(Window.unboundedPreceding, 0)))
-    val iv = v.groupBy(col("user_id"), col("version"), col("event_type"))
-      .agg(min(col("t")).as("vf"), count(lit(1)).as("n_events"))
-    val wVer = Window.partitionBy(col("user_id")).orderBy(col("version"))
-    iv.select(col("user_id"), col("version"), col("event_type"),
-        date_format(col("vf"), "yyyy-MM-dd HH:mm:ss").as("valid_from"),
-        coalesce(date_format(lead(col("vf"), 1).over(wVer), "yyyy-MM-dd HH:mm:ss"),
+    scd2Intervals(e, "user_id", Seq("t", "event_id"), "event_type", "t")
+      .select(col("user_id"), col("run").as("version"), col("event_type"),
+        date_format(col("valid_from"), "yyyy-MM-dd HH:mm:ss").as("valid_from"),
+        coalesce(date_format(col("valid_to"), "yyyy-MM-dd HH:mm:ss"),
           lit("(current)")).as("valid_to"),
-        col("n_events"))
+        col("n").as("n_events"))
       .orderBy(col("user_id"), col("version"))
+  }
+
+  /** SCD type-2 islands, the dimension-history build of q115 and q219:
+    * per `key`, rows in `order` collapse into runs of equal `attr`. The
+    * change flag is a null-safe lag compare, the run id a running sum of
+    * flags, each run one group (start = min `at`, n = its rows), and a
+    * lead over run starts closes every interval — three window passes
+    * over one `key` partitioning, no self-join. Returns (key, run, attr,
+    * valid_from, n, valid_to); valid_to is NULL for the open run.
+    */
+  private[operators] def scd2Intervals(df: DataFrame, key: String,
+      order: Seq[String], attr: String, at: String): DataFrame = {
+    val w = Window.partitionBy(col(key)).orderBy(order.map(col): _*)
+    df.withColumn("chg",
+        when(not(col(attr) <=> lag(col(attr), 1).over(w)), 1L).otherwise(0L))
+      .withColumn("run",
+        sum(col("chg")).over(w.rowsBetween(Window.unboundedPreceding,
+          Window.currentRow)))
+      .groupBy(col(key), col("run"), col(attr))
+      .agg(min(col(at)).as("valid_from"), count(lit(1)).as("n"))
+      .withColumn("valid_to", lead(col("valid_from"), 1).over(
+        Window.partitionBy(col(key)).orderBy(col("run"))))
   }
 
   /** q117 — event-time RANGE window frames: per-user rolling 1-hour
@@ -214,7 +226,7 @@ object Temporal {
     * user_id; frame peers at equal timestamps are included by RANGE
     * semantics in both engines.
     */
-  val q117 = oracled(
+  val q117 = sqlSurface(
     "q117_time_range_frame",
     "rolling 1-hour RANGE frame per user (time-bounded, not row-bounded)",
     """SELECT user_id, event_id,
@@ -224,18 +236,8 @@ object Temporal {
              FROM events WHERE user_id < 20)
        WINDOW w AS (PARTITION BY user_id ORDER BY t
          RANGE BETWEEN INTERVAL '1' HOUR PRECEDING AND CURRENT ROW)
-       ORDER BY user_id, event_id""") { (s, dir) =>
-    Tables.events(s, dir).filter(col("user_id") < 20)
-      .select(col("user_id"), col("event_id"), col("ts").as("t"), col("value"))
-      .createOrReplaceTempView("events_q117")
-    s.sql("""SELECT user_id, event_id,
-               CAST(COUNT(*) OVER w AS BIGINT) AS n_1h,
-               CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS sum_1h
-             FROM events_q117
-             WINDOW w AS (PARTITION BY user_id ORDER BY t
-               RANGE BETWEEN INTERVAL '1' HOUR PRECEDING AND CURRENT ROW)
-             ORDER BY user_id, event_id""")
-  }
+       ORDER BY user_id, event_id""",
+    "events")
 
   /** q126 — the custom physical as-of operator through the correctness
     * gate: the SAME query as q56, executed by
@@ -925,12 +927,11 @@ object Temporal {
     * dimension table every warehouse derives from a mutable attribute
     * stream. Orders sort per customer by (date, orderkey); runs of equal
     * priority collapse to one interval [valid_from, valid_to) where
-    * valid_to is the next run's start (NULL = current). The change flag
-    * is a lag() compare, the run id a running sum of flags, the interval
-    * a groupBy over (customer, run) — one window shuffle on custkey,
-    * then an agg and a second window on the already-tiny run table,
-    * both key-compatible with the first shuffle's partitioning. The
-    * oracle states the identical islands-and-gaps construction in SQL.
+    * valid_to is the next run's start (NULL = current), built by
+    * [[scd2Intervals]]: one window shuffle on custkey, then an agg and a
+    * second window on the already-tiny run table, both key-compatible
+    * with the first shuffle's partitioning. The oracle states the
+    * identical islands-and-gaps construction in SQL.
     */
   val q219 = oracled(
     "q219_scd2_priority_history",
@@ -957,26 +958,13 @@ object Temporal {
            AS valid_to,
          n_orders
        FROM iv ORDER BY o_custkey, seq""") { (s, dir) =>
-    val wo = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("d"), col("o_orderkey"))
-    val runs = Tables.orders(s, dir)
+    val o = Tables.orders(s, dir)
       .select(col("o_custkey"), col("o_orderkey"),
         col("o_orderdate").cast("date").as("d"),
         col("o_orderpriority").as("pr"))
-      .withColumn("chg",
-        when(not(col("pr") <=> lag(col("pr"), 1).over(wo)), 1L)
-          .otherwise(0L))
-      .withColumn("seq",
-        sum(col("chg")).over(wo.rowsBetween(Window.unboundedPreceding,
-          Window.currentRow)))
-      .groupBy(col("o_custkey"), col("seq"), col("pr"))
-      .agg(min(col("d")).as("valid_from"), count(lit(1)).as("n_orders"))
-    runs
-      .withColumn("valid_to",
-        lead(col("valid_from"), 1).over(
-          Window.partitionBy(col("o_custkey")).orderBy(col("seq"))))
-      .select(col("o_custkey"), col("seq"), col("pr").as("priority"),
-        col("valid_from"), col("valid_to"), col("n_orders"))
+    scd2Intervals(o, "o_custkey", Seq("d", "o_orderkey"), "pr", "d")
+      .select(col("o_custkey"), col("run").as("seq"), col("pr").as("priority"),
+        col("valid_from"), col("valid_to"), col("n").as("n_orders"))
       .orderBy(col("o_custkey"), col("seq"))
   }
 
@@ -1201,17 +1189,8 @@ object Temporal {
            AS sum_filled_c,
          CAST(SUM(vc) AS BIGINT) AS sum_all_c
        FROM v GROUP BY item_id ORDER BY item_id""") { (s, dir) =>
-    val e = Tables.events(s, dir)
-      .select((col("event_id") % 100).as("item_id"),
-        col("ts").cast("date").as("day"), unix_micros(col("ts")).as("us"),
-        col("event_id"),
-        (dec2(col("value")) * 100).cast("long").as("cents"))
-    val cl = e
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("item_id"), col("day"))
-          .orderBy(col("us").desc, col("event_id").desc)))
-      .filter(col("rn") === 1)
-      .select(col("item_id"), col("day"), col("cents").as("close_c"))
+    val cl = dailyCloses(s, dir)
+      .select(col("item_id"), col("day"), col("c").as("close_c"))
     val grid = cl.groupBy(col("item_id"))
       .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
       .select(col("item_id"), explode(sequence(col("d0"), col("d1")))
@@ -1337,19 +1316,7 @@ object Temporal {
          CAST(num AS BIGINT) AS slope_num, den AS slope_den
        FROM rk WHERE rn = (np - 1) // 2 + 1
        ORDER BY item_id""") { (s, dir) =>
-    val e = Tables.events(s, dir)
-      .select((col("event_id") % 100).as("item_id"),
-        col("ts").cast("date").as("day"), unix_micros(col("ts")).as("us"),
-        col("event_id"),
-        (dec2(col("value")) * 100).cast("long").as("cents"))
-    val cl = e
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("item_id"), col("day"))
-          .orderBy(col("us").desc, col("event_id").desc)))
-      .filter(col("rn") === 1)
-      .select(col("item_id"),
-        datediff(col("day"), lit("1970-01-01")).cast("long").as("t"),
-        col("cents").as("c"))
+    val cl = dailyCloses(s, dir)
     val pr = cl.alias("a").join(cl.alias("b"),
         col("a.item_id") === col("b.item_id") && col("a.t") < col("b.t"))
       .select(col("a.item_id").as("item_id"),
@@ -1405,33 +1372,48 @@ object Temporal {
          n * stt - st * st AS den
        FROM m WHERE n * stt - st * st > 0
        ORDER BY item_id""") { (s, dir) =>
-    val e = Tables.events(s, dir)
-      .select((col("event_id") % 100).as("item_id"),
-        col("ts").cast("date").as("day"), unix_micros(col("ts")).as("us"),
-        col("event_id"),
-        (dec2(col("value")) * 100).cast("long").as("cents"))
-    val cl = e
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("item_id"), col("day"))
-          .orderBy(col("us").desc, col("event_id").desc)))
-      .filter(col("rn") === 1)
-      .select(col("item_id"),
-        datediff(col("day"), lit("1970-01-01")).cast("long").as("t0"),
-        col("cents").as("c"))
-    cl.withColumn("t",
-        col("t0") - min(col("t0")).over(Window.partitionBy(col("item_id"))))
-      .groupBy(col("item_id"))
-      .agg(count(lit(1)).as("n"), sum(col("t")).as("st"),
-        sum(col("c")).as("sc"), sum(col("t") * col("c")).as("stc"),
-        sum(col("t") * col("t")).as("stt"))
+    val cl = dailyCloses(s, dir)
+    olsMoments(cl.withColumn("t",
+        col("t") - min(col("t")).over(Window.partitionBy(col("item_id")))),
+        "item_id", "t", "c")
       .filter(col("n") * col("stt") - col("st") * col("st") > 0)
       .select(col("item_id"), col("n").as("n_days"),
-        (col("n") * col("stc") - col("st") * col("sc")).as("slope_num"),
-        (col("sc") * col("stt") - col("st") * col("stc"))
+        (col("n") * col("sty") - col("st") * col("sy")).as("slope_num"),
+        (col("sy") * col("stt") - col("st") * col("sty"))
           .as("intercept_num"),
         (col("n") * col("stt") - col("st") * col("st")).as("den"))
       .orderBy(col("item_id"))
   }
+
+  /** The last close of every (item, day), the series q227, q234 and q235
+    * fit: items are `event_id % 100`, the close is the day's latest event
+    * under (µs, event_id), picked by one keyed rank-1 window, in exact
+    * cents. Returns (item_id, day, t, c), t the epoch day.
+    */
+  private[operators] def dailyCloses(s: SparkSession, dir: String): DataFrame =
+    Tables.events(s, dir)
+      .select((col("event_id") % 100).as("item_id"),
+        col("ts").cast("date").as("day"), unix_micros(col("ts")).as("us"),
+        col("event_id"),
+        (dec2(col("value")) * 100).cast("long").as("cents"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("item_id"), col("day"))
+          .orderBy(col("us").desc, col("event_id").desc)))
+      .filter(col("rn") === 1)
+      .select(col("item_id"), col("day"),
+        datediff(col("day"), lit("1970-01-01")).cast("long").as("t"),
+        col("cents").as("c"))
+
+  /** The five OLS moment sums of `y` on `t` per `key` — n, Σt, Σy, Σt²
+    * and Σty as (key, n, st, sy, stt, sty) — from which q235 and q295
+    * state their slopes as exact rationals. One aggregate: the moments
+    * stream through map-side partial sums.
+    */
+  private[operators] def olsMoments(df: DataFrame, key: String, t: String,
+      y: String): DataFrame =
+    df.groupBy(col(key))
+      .agg(count(lit(1)).as("n"), sum(col(t)).as("st"), sum(col(y)).as("sy"),
+        sum(col(t) * col(t)).as("stt"), sum(col(t) * col(y)).as("sty"))
 
   /** q242 — OHLC RE-AGGREGATION: daily bars composed from the 6-hour
     * bars, never from raw ticks — the property that makes bar tables a
@@ -1988,10 +1970,7 @@ object Temporal {
     val ser = d.crossJoin(broadcast(m))
       .select(col("event_type"),
         datediff(col("day"), col("d0")).cast("long").as("t"), col("y"))
-    ser.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("t")).as("st"),
-        sum(col("y")).as("sy"), sum(col("t") * col("t")).as("stt"),
-        sum(col("t") * col("y")).as("sty"))
+    olsMoments(ser, "event_type", "t", "y")
       .select(col("event_type"), col("n").as("n_days"),
         col("sy").as("sum_cents"),
         (col("n") * col("sty") - col("st") * col("sy")).as("slope_num"),

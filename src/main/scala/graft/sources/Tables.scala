@@ -101,6 +101,12 @@ object Tables {
     }
   }
   def documents(s: SparkSession, d: String): DataFrame = apply(s, d, "documents")
+
+  /** The named fixture table as queries read it: `events` through
+    * [[events]]'s ts normalization, every other table as stored.
+    */
+  def named(s: SparkSession, d: String, name: String): DataFrame =
+    if (name == "events") events(s, d) else apply(s, d, name)
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
 
   /** Headerless TSV ratings reader matching the reference's input shape

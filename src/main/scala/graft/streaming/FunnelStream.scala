@@ -3,33 +3,24 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig, TimeMode, ValueState}
+
+import SortBuffer.{Parked, toUs}
 
 /** Streaming twin of the q218 funnel
   * ([[graft.operators.Temporal.funnelPerUser]]): view → click →
   * purchase with ordered first-qualifying semantics over an
   * out-of-order event stream.
   *
-  * The hard part of a streaming funnel is that its semantics are
-  * ORDER-SENSITIVE — a click converts only if a view precedes it in
-  * (event-time, event_id) order, so an event can't be folded the
-  * moment it arrives: a still-in-flight earlier view could change its
-  * meaning. The resolution is the standard watermark sort-buffer: each
-  * event parks in per-user ListState until the watermark passes it,
-  * then every parked event strictly below the watermark folds through
-  * the funnel automaton in (us, event_id) order. Because watermarks
-  * are monotone and late-beyond-watermark rows are dropped upstream,
-  * successive finalization batches cover non-overlapping, increasing
-  * time ranges — the global fold order equals the batch window order,
-  * and the final snapshots are bit-equal to the batch funnel
-  * (FunnelStreamSpec proves it on a shuffled stream).
-  *
-  * One event-time timer per user guards the buffer (armed at the
-  * earliest parked event, re-armed after every finalization), so a
-  * user needs no new traffic for their buffer to drain. State per user
-  * is the folded triple plus only the not-yet-final events inside the
-  * watermark delay — bounded by delay × per-user rate, the same
-  * contract as [[NearDupStream]].
+  * The semantics are ORDER-SENSITIVE — a click converts only if a view
+  * precedes it in (event-time, event_id) order, so an event cannot fold
+  * on arrival while an earlier view may still be in flight. The events
+  * wait in the watermark sort-buffer ([[SortBuffer]]) and fold through
+  * the funnel automaton in (us, event_id) order; the final snapshots are
+  * bit-equal to the batch funnel (FunnelStreamSpec proves it on a
+  * shuffled stream). State per user is the folded triple plus the
+  * parked events inside the watermark delay — bounded by delay ×
+  * per-user rate, the [[NearDupStream]] contract.
   */
 object FunnelStream {
 
@@ -37,12 +28,8 @@ object FunnelStream {
   final case class FEv(user_id: Long, ts: Timestamp, event_id: Long,
       event_type: String)
 
-  /** A parked not-yet-finalized event. */
-  final case class Parked(us: Long, eid: Long, tp: String)
-
-  /** Folded stage timestamps (-1 = not reached) + bookkeeping. */
-  final case class Folded(vUs: Long, cUs: Long, pUs: Long, nDone: Long,
-      timerMs: Long)
+  /** Folded stage timestamps (-1 = not reached) + events folded. */
+  final case class Folded(vUs: Long, cUs: Long, pUs: Long, nDone: Long)
 
   /** Per-trigger snapshot; the row with the max n_done per user is the
     * final answer (n_done grows monotonically).
@@ -50,31 +37,21 @@ object FunnelStream {
   final case class Snap(user_id: Long, v_us: Option[Long],
       c_us: Option[Long], p_us: Option[Long], n_done: Long, n_pending: Long)
 
-  class Processor extends StatefulProcessor[Long, FEv, Snap] {
+  class Processor extends SortBuffer[FEv, Snap] {
     @transient private var folded: ValueState[Folded] = _
-    @transient private var parked: ListState[Parked] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+    override protected def open(): Unit =
       folded = getHandle.getValueState[Folded](
         "folded", Encoders.product[Folded], TTLConfig.NONE)
-      parked = getHandle.getListState[Parked](
-        "parked", Encoders.product[Parked], TTLConfig.NONE)
-    }
 
-    private def toUs(t: Timestamp): Long =
-      t.getTime * 1000L + (t.getNanos / 1000) % 1000L
+    override protected def park(e: FEv): Parked =
+      Parked(toUs(e.ts), e.event_id, e.event_type)
 
-    /** Fold + park + re-arm, shared by data and timer paths. */
-    private def advance(key: Long, incoming: Array[Parked],
-        timerValues: TimerValues): Iterator[Snap] = {
-      val wmUs = timerValues.getCurrentWatermarkInMs() * 1000L
-      val all = (parked.get().toArray ++ incoming)
-      val (ready, pending) = all.partition(_.us < wmUs)
-      var st = if (folded.exists()) folded.get()
-        else Folded(-1L, -1L, -1L, 0L, 0L)
-      java.util.Arrays.sort(ready, Ordering.by((p: Parked) => (p.us, p.eid)))
+    override protected def fold(key: Long, ready: Array[Parked],
+        nPending: Long): Iterator[Snap] = {
+      var st = if (folded.exists()) folded.get() else Folded(-1L, -1L, -1L, 0L)
       ready.foreach { e =>
-        e.tp match {
+        e.v match {
           case "view" if st.vUs < 0 => st = st.copy(vUs = e.us)
           case "click" if st.cUs < 0 && st.vUs >= 0 => st = st.copy(cUs = e.us)
           case "purchase" if st.pUs < 0 && st.cUs >= 0 =>
@@ -83,31 +60,11 @@ object FunnelStream {
         }
       }
       st = st.copy(nDone = st.nDone + ready.length)
-      parked.clear()
-      if (pending.nonEmpty) parked.appendList(pending)
-      // one live timer: fire when the watermark passes the earliest
-      // parked event (ms granularity — strictly after its microsecond)
-      val want = if (pending.isEmpty) 0L
-        else pending.map(_.us).min / 1000L + 1L
-      if (st.timerMs != 0L && st.timerMs != want)
-        getHandle.deleteTimer(st.timerMs)
-      if (want != 0L && st.timerMs != want) getHandle.registerTimer(want)
-      st = st.copy(timerMs = want)
       folded.update(st)
       def opt(v: Long) = if (v < 0) None else Some(v)
       Iterator.single(Snap(key, opt(st.vUs), opt(st.cUs), opt(st.pUs),
-        st.nDone, pending.length.toLong))
+        st.nDone, nPending))
     }
-
-    override def handleInputRows(key: Long, rows: Iterator[FEv],
-        timerValues: TimerValues): Iterator[Snap] =
-      advance(key,
-        rows.map(e => Parked(toUs(e.ts), e.event_id, e.event_type)).toArray,
-        timerValues)
-
-    override def handleExpiredTimer(key: Long, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[Snap] =
-      advance(key, Array.empty, timerValues)
   }
 
   /** Append-mode stream of per-user funnel snapshots. */

@@ -3,7 +3,9 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig, TimeMode, ValueState}
+
+import SortBuffer.{Parked, toUs}
 
 /** Streaming SCD Type-2 (VERDICT r9 #7b): q219's islands logic — runs
   * of an attribute value collapse to half-open validity intervals
@@ -14,9 +16,9 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, 
   * order extends the current run or closes it depends on every earlier
   * order, so an event cannot fold on arrival while an earlier one may
   * still be in flight. Same resolution as [[FunnelStream]]: the
-  * watermark sort-buffer. Events park in per-customer ListState until
-  * the watermark passes them, then fold through the run automaton in
-  * (event-time, orderkey) order: same priority → run extends; changed
+  * watermark sort-buffer ([[SortBuffer]]). Events park per customer
+  * until the watermark passes them, then fold through the run automaton
+  * in (event-time, orderkey) order: same priority → run extends; changed
   * priority → the open run CLOSES (valid_to = the new run's start) and
   * is emitted exactly once, final; a new run opens. Every advance also
   * emits a snapshot of the open run (valid_to = NULL, closed = false)
@@ -26,9 +28,9 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, 
   * serial reference on shuffled streams, at timestamp granularity —
   * the batch query's DATE axis is one upstream cast).
   *
-  * One event-time timer per customer drains the buffer without new
-  * traffic; state per customer is one open run + the parked events
-  * inside the watermark delay — bounded by delay × per-key rate, the
+  * The buffer's event-time timer drains it without new traffic; state
+  * per customer is one open run + the parked events inside the watermark
+  * delay — bounded by delay × per-key rate, the
   * [[NearDupStream]]/[[FunnelStream]] contract.
   */
 object ScdStream {
@@ -37,12 +39,9 @@ object ScdStream {
   final case class OrderEv(custkey: Long, ts: Timestamp, orderkey: Long,
       priority: String)
 
-  /** A parked not-yet-finalized observation. */
-  final case class Parked(us: Long, okey: Long, pr: String)
-
-  /** The open run + bookkeeping (started=false ⇒ no event folded yet). */
+  /** The open run + events folded (started=false ⇒ no event folded yet). */
   final case class Run(seq: Long, pr: String, fromUs: Long, nOrders: Long,
-      nDone: Long, timerMs: Long, started: Boolean)
+      nDone: Long, started: Boolean)
 
   /** Emitted interval: closed=true rows are final (exactly once);
     * closed=false rows are open-run snapshots — max n_done per key is
@@ -52,67 +51,41 @@ object ScdStream {
       valid_from_us: Long, valid_to_us: Option[Long], n_orders: Long,
       closed: Boolean, n_done: Long, n_pending: Long)
 
-  class Processor extends StatefulProcessor[Long, OrderEv, Interval] {
+  class Processor extends SortBuffer[OrderEv, Interval] {
     @transient private var run: ValueState[Run] = _
-    @transient private var parked: ListState[Parked] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+    override protected def open(): Unit =
       run = getHandle.getValueState[Run](
         "run", Encoders.product[Run], TTLConfig.NONE)
-      parked = getHandle.getListState[Parked](
-        "parked", Encoders.product[Parked], TTLConfig.NONE)
-    }
 
-    private def toUs(t: Timestamp): Long =
-      t.getTime * 1000L + (t.getNanos / 1000) % 1000L
+    override protected def park(e: OrderEv): Parked =
+      Parked(toUs(e.ts), e.orderkey, e.priority)
 
-    private def advance(key: Long, incoming: Array[Parked],
-        timerValues: TimerValues): Iterator[Interval] = {
-      val wmUs = timerValues.getCurrentWatermarkInMs() * 1000L
-      val all = parked.get().toArray ++ incoming
-      val (ready, pending) = all.partition(_.us < wmUs)
+    override protected def fold(key: Long, ready: Array[Parked],
+        nPending: Long): Iterator[Interval] = {
       var st = if (run.exists()) run.get()
-        else Run(0L, "", -1L, 0L, 0L, 0L, started = false)
-      java.util.Arrays.sort(ready, Ordering.by((p: Parked) => (p.us, p.okey)))
+        else Run(0L, "", -1L, 0L, 0L, started = false)
       val out = scala.collection.mutable.ArrayBuffer.empty[Interval]
       ready.foreach { e =>
         if (!st.started)
-          st = st.copy(seq = 1L, pr = e.pr, fromUs = e.us, nOrders = 1L,
+          st = st.copy(seq = 1L, pr = e.v, fromUs = e.us, nOrders = 1L,
             started = true)
-        else if (e.pr == st.pr)
+        else if (e.v == st.pr)
           st = st.copy(nOrders = st.nOrders + 1L)
         else {
           out += Interval(key, st.seq, st.pr, st.fromUs, Some(e.us),
-            st.nOrders, closed = true, st.nDone, pending.length.toLong)
-          st = st.copy(seq = st.seq + 1L, pr = e.pr, fromUs = e.us,
+            st.nOrders, closed = true, st.nDone, nPending)
+          st = st.copy(seq = st.seq + 1L, pr = e.v, fromUs = e.us,
             nOrders = 1L)
         }
       }
       st = st.copy(nDone = st.nDone + ready.length)
-      parked.clear()
-      if (pending.nonEmpty) parked.appendList(pending)
-      val want = if (pending.isEmpty) 0L
-        else pending.map(_.us).min / 1000L + 1L
-      if (st.timerMs != 0L && st.timerMs != want)
-        getHandle.deleteTimer(st.timerMs)
-      if (want != 0L && st.timerMs != want) getHandle.registerTimer(want)
-      st = st.copy(timerMs = want)
       run.update(st)
       if (st.started)
         out += Interval(key, st.seq, st.pr, st.fromUs, None, st.nOrders,
-          closed = false, st.nDone, pending.length.toLong)
+          closed = false, st.nDone, nPending)
       out.iterator
     }
-
-    override def handleInputRows(key: Long, rows: Iterator[OrderEv],
-        timerValues: TimerValues): Iterator[Interval] =
-      advance(key,
-        rows.map(e => Parked(toUs(e.ts), e.orderkey, e.priority)).toArray,
-        timerValues)
-
-    override def handleExpiredTimer(key: Long, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[Interval] =
-      advance(key, Array.empty, timerValues)
   }
 
   /** Append-mode stream of closed intervals + open-run snapshots. */

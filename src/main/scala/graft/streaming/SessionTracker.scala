@@ -4,6 +4,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import SortBuffer.toUs
+
 /** Custom sessionization with explicit state + event-time timeout
   * (`flatMapGroupsWithState`) — the general form of what
   * `session_window` (Olap.q29) does declaratively, for when per-session
@@ -27,9 +29,6 @@ object SessionTracker {
     val spark = events.sparkSession
     import spark.implicits._
     val gapUs = gapMinutes * 60L * 1000000L
-
-    // full microsecond precision: Timestamp.getTime is millis-only
-    def toUs(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000) % 1000L
 
     def update(userId: Long, batch: Iterator[Ev],
         state: GroupState[OpenSession]): Iterator[ClosedSession] = {

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import java.sql.Timestamp
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+
+import SortBuffer.toUs
 
 /** Sessionization on the state-v2 TIMER facility: the transformWithState
   * twin of [[SessionTracker]] (flatMapGroupsWithState +
@@ -31,9 +32,6 @@ object TimerSessions {
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       open = getHandle.getValueState[OpenT](
         "open_session", Encoders.product[OpenT], TTLConfig.NONE)
-
-    private def toUs(t: Timestamp): Long =
-      t.getTime * 1000L + (t.getNanos / 1000) % 1000L
 
     override def handleInputRows(
         key: Long,

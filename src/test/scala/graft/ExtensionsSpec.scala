@@ -121,6 +121,17 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(fp != 0L)
   }
 
+  test("SQL-surface queries leave the caller's temp views unchanged") {
+    def tempViews = spark.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).toSet
+    val before = tempViews
+    Seq(operators.Advanced.q61, operators.Temporal.q117,
+        operators.Advanced.q118, operators.Advanced.q119,
+        operators.Relational.q202)
+      .foreach(q => q.run(spark, sfDir).collect())
+    assert(tempViews === before)
+  }
+
   test("injectParser: SHOW GRAFT QUERIES / FUNCTIONS parse on the withExtensions path") {
     val prev = spark // materialize the shared session (and its context) first
     // getOrCreate reuses any default session and would skip extension

@@ -186,4 +186,23 @@ class TemporalSpec extends AnyFunSuite {
       sNum % sDen == 0 && p.contains(sNum / sDen / 7)
     })
   }
+
+  test("q87 and q218 split on a same-microsecond view and click") {
+    import spark.implicits._
+    // one user: a view and a click in the same microsecond, the click
+    // with the larger event_id. q218's (us, event_id) order puts the
+    // click after the view; q87's strict ts > t_view does not.
+    val ts = java.sql.Timestamp.valueOf("2024-03-01 10:00:00.000001")
+    val dir = java.nio.file.Files.createTempDirectory("graft-q87-q218").toString
+    Seq((1L, 7L, "view", ts, 1.0), (2L, 7L, "click", ts, 1.0))
+      .toDF("event_id", "user_id", "event_type", "ts", "value")
+      .write.parquet(s"$dir/events.parquet")
+    try {
+      val q87 = operators.Temporal.q87.run(spark, dir).head()
+      assert((q87.getLong(0), q87.getLong(1)) == ((1L, 0L)))
+      val q218 = operators.Temporal.q218.run(spark, dir).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(q218 == Map("1_view" -> 1L, "2_click" -> 1L, "3_purchase" -> 0L))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
 }
